@@ -4533,7 +4533,7 @@ def q_crawl_polite_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's queue order embedded as a VALUES literal."""
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.corpus import generate_corpus
-    from webcrawler_spark.rounds import run_polite_crawl
+    from webcrawler_spark.rounds import run_crawl
 
     corpus = generate_corpus(**_POLITE_CORPUS)
     rows = [
@@ -4542,7 +4542,7 @@ def q_crawl_polite_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     pages = spark.createDataFrame(rows)
     cfg = CrawlConfig(**_POLITE_CAPPED_CFG)
-    res = run_polite_crawl(spark, pages, corpus.seeds, cfg, with_processor=False)
+    res = run_crawl(spark, pages, corpus.seeds, cfg, with_processor=False)
     return res.queue
 
 
@@ -4575,7 +4575,7 @@ def q_crawl_max_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential politeness oracle's queue order under the same budget."""
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.corpus import generate_corpus
-    from webcrawler_spark.rounds import run_polite_crawl
+    from webcrawler_spark.rounds import run_crawl
 
     corpus = generate_corpus(**_POLITE_CORPUS)
     rows = [
@@ -4584,7 +4584,7 @@ def q_crawl_max_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     pages = spark.createDataFrame(rows)
     cfg = CrawlConfig(**_MAX_PAGES_CFG)
-    res = run_polite_crawl(spark, pages, corpus.seeds, cfg, with_processor=False)
+    res = run_crawl(spark, pages, corpus.seeds, cfg, with_processor=False)
     return res.queue
 
 
@@ -4612,7 +4612,7 @@ def q_crawl_timed_politeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     3rd round — queue order must still match the sequential oracle."""
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.corpus import generate_corpus
-    from webcrawler_spark.rounds import run_polite_crawl
+    from webcrawler_spark.rounds import run_crawl
 
     corpus = generate_corpus(**_POLITE_CORPUS)
     rows = [
@@ -4624,7 +4624,7 @@ def q_crawl_timed_politeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         list(_timed_delay_map(corpus).items()), "host string, crawl_delay_ms long"
     )
     cfg = CrawlConfig(**_TIMED_CFG)
-    res = run_polite_crawl(
+    res = run_crawl(
         spark, pages, corpus.seeds, cfg, delays=delays_df, with_processor=False
     )
     return res.queue

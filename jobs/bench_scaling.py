@@ -179,7 +179,6 @@ def main() -> int:
     ap.add_argument("--cores-high", type=int, default=32)
     ap.add_argument("--max-depth", type=int, default=2)
     ap.add_argument("--repeat", type=int, default=2)
-    ap.add_argument("--use-bloom", action="store_true")
     ap.add_argument(
         "--seen-filter", choices=["bloom", "cuckoo"], default=None,
         help="seen-set sidecar strategy forwarded to jobs/crawl.py "
@@ -212,9 +211,7 @@ def main() -> int:
     zip_path = shutil.make_archive(
         os.path.join(tmp, "engine"), "zip", root_dir=REPO, base_dir="webcrawler_spark"
     )
-    extra = ["--use-bloom"] if args.use_bloom else []
-    if args.seen_filter:
-        extra += ["--seen-filter", args.seen_filter]
+    extra = ["--seen-filter", args.seen_filter] if args.seen_filter else []
 
     if args.only_cores is not None:
         best_s: dict = {}
@@ -290,7 +287,7 @@ def main() -> int:
         "metric": "urls_fetched+deduped_per_sec",
         "corpus": pages,
         "max_depth": args.max_depth,
-        "seen_filter": args.seen_filter or ("bloom" if args.use_bloom else "exact"),
+        "seen_filter": args.seen_filter or "exact",
         "low": lo,
         "high": hi,
         "scale_factor": factor,

@@ -115,12 +115,12 @@ def test_gated_crawl_matches_sequential_oracle_fused(spark):
 
 @pytest.mark.slow
 def test_gated_polite_crawl_matches_oracle(spark):
-    """run_polite_crawl with the gate: gated fetches consume their admission
+    """A polite run_crawl with the gate: gated fetches consume their admission
     slot but harvest nothing; docs surface SKIPPED_* rows."""
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.corpus import generate_corpus
     from webcrawler_spark.oracle import crawl_oracle_polite
-    from webcrawler_spark.rounds import run_polite_crawl
+    from webcrawler_spark.rounds import run_crawl
 
     corpus = generate_corpus(seed=11, n_hosts=4, n_pages=28)
     ctypes = {
@@ -134,7 +134,7 @@ def test_gated_polite_crawl_matches_oracle(spark):
     cfg = CrawlConfig(
         max_depth=2, per_host_budget=3, allowed_content_types=["text/html"]
     )
-    res = run_polite_crawl(spark, pages, corpus.seeds, cfg, with_processor=True)
+    res = run_crawl(spark, pages, corpus.seeds, cfg, with_processor=True)
     got = {r.url: r.status for r in res.docs.select("url", "status").collect()}
     got_order = [r.url for r in res.queue.collect()]
     o = crawl_oracle_polite(

@@ -455,7 +455,7 @@ def test_resume_after_evict_readmits_due_urls(spark, tmp_path):
     --evict commits url_seen / cuckoo_sidecar at versions NEWER than the
     stop snapshot; run_crawl(resume=True) must load those (not the stale
     stop-version tables) so the due urls are re-admitted — and, with the
-    processor on (_vis = _dup), re-traversed, i.e. actually refetched in
+    processor on, re-traversed (_ntrav = 0), i.e. actually refetched in
     the next round's frontier join. With the pre-fix resume (pinned at
     start_depth) the re-admitted set is empty."""
     from jobs.recrawl import run as recrawl_run
@@ -537,14 +537,14 @@ def test_resume_after_evict_readmits_due_urls(spark, tmp_path):
     assert expected, "corpus must re-encounter some due urls after round 0"
     assert set(readmitted) == expected
 
-    # refetch evidence: a url re-admitted at round 1 is re-traversed
-    # (_vis == 0 in the stored round table), so it sits in round 2's fetch
-    # frontier by construction of the frontier join
+    # refetch evidence: a url re-admitted at round 1 (first_depth 2) is
+    # re-traversed (_ntrav == 0 in the stored round table), so it sits in
+    # round 2's fetch frontier by construction of the frontier join
     r1 = {
-        r.url: r._vis
+        r.url: r._ntrav
         for r in store_e.read_table(spark, "round", 1).collect()
         if r.url in evicted
     }
     for u, d in readmitted.items():
-        if d == 1:
+        if d == 2:
             assert r1[u] == 0

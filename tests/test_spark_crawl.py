@@ -86,7 +86,7 @@ def test_include_exclude_filters_match(spark, pages_df, small_corpus):
 def test_bloom_path_identical_results(spark, pages_df, small_corpus):
     cfg = CrawlConfig(max_depth=2)
     oracle, result = _run_both(
-        spark, pages_df, small_corpus, cfg, with_processor=False, use_bloom=True
+        spark, pages_df, small_corpus, cfg, with_processor=False, seen_filter="bloom"
     )
     got = [r["url"] for r in result.queue.collect()]
     assert got == oracle.queue_order
@@ -322,7 +322,6 @@ def tiny_pages_df(spark, tiny_corpus, tmp_path_factory):
 
 def _run_both_polite(spark, pages_df, corpus, cfg, entry=None, robots=False, **kw):
     from webcrawler_spark.oracle import crawl_oracle_polite
-    from webcrawler_spark.rounds import run_polite_crawl
 
     entry = entry or corpus.seeds
     rob_dict = None
@@ -335,7 +334,7 @@ def _run_both_polite(spark, pages_df, corpus, cfg, entry=None, robots=False, **k
     oracle = crawl_oracle_polite(
         {u: h for u, (t, h, l) in corpus.pages.items()}, entry, cfg, robots=rob_dict
     )
-    result = run_polite_crawl(spark, pages_df, entry, cfg, robots=rob_df, **kw)
+    result = run_crawl(spark, pages_df, entry, cfg, robots=rob_df, **kw)
     return oracle, result
 
 
@@ -369,11 +368,33 @@ def test_polite_store_commits_round_tables(spark, tiny_pages_df, tiny_corpus, tm
     queue = [r["url"] for r in r2.queue.collect()]
     assert queue == oracle.queue_order
     m = store.load_manifest()
-    assert m is not None and m.committed_round == r2.rounds_run
+    assert m is not None and m.committed_round == r2.rounds_run - 1
     for rnd in range(r2.rounds_run):
         assert store.count_table("round", rnd) >= 0  # written + readable
     committed = store.read_committed(spark, "url_seen")
     assert {r["url"] for r in committed.collect()} == set(queue)
+
+    # hosts_served per (round, partition) = distinct hosts among the round's
+    # newly enqueued urls, recounted from the committed round tables
+    from pyspark.sql import functions as F
+
+    want, off_depth = {}, 0
+    for rnd in range(r2.rounds_run):
+        new = store.read_table(spark, "round", rnd).filter(F.col("_dup") == 0)
+        off_depth += new.filter(F.col("first_depth") != rnd + 1).count()
+        for r in new.groupBy("_part").agg(
+            F.count_distinct("host_hash").alias("h")
+        ).collect():
+            want[(rnd, r["_part"])] = r["h"]
+    got = {
+        (l["round"], l["partition_id"]): l["hosts_served"]
+        for l in r2.lineage
+        if l["partition_id"] >= 0
+    }
+    assert got == want
+    # deferral really decoupled rounds from depths here, so keying
+    # hosts_served by first_depth would have been wrong
+    assert off_depth > 0
 
 
 @pytest.mark.slow
@@ -425,7 +446,6 @@ def test_polite_mixed_depth_traversal_matches_oracle(spark):
     b1 (depth 2 == max_depth, grank 5) and c0 (depth 1, grank 6), both
     linking to X: X's subtree (y0) must appear in the queue."""
     from webcrawler_spark.oracle import crawl_oracle_polite
-    from webcrawler_spark.rounds import run_polite_crawl
 
     def page(*links):
         return (
@@ -459,10 +479,45 @@ def test_polite_mixed_depth_traversal_matches_oracle(spark):
     pages_df = spark.createDataFrame(
         [(u, h.encode()) for u, h in corpus.items()], "url string, html binary"
     )
-    result = run_polite_crawl(spark, pages_df, [a0, a1, a2], cfg, with_processor=False)
+    result = run_crawl(spark, pages_df, [a0, a1, a2], cfg, with_processor=False)
     got = [r["url"] for r in result.queue.collect()]
     assert got == oracle.queue_order
     assert result.rounds_run == oracle.rounds
+
+
+@pytest.mark.slow
+def test_polite_late_traversal_keeps_queue_pos(spark):
+    """A url first harvested past maxDepth (enqueued, not traversed) and
+    later harvested by a deferred shallower parent is traversed then, and its
+    raw-captured doc must carry the queue position it already holds. Budget
+    1 on host a defers a2 to round 2; b0 harvests x at depth 2 in round 1."""
+    from webcrawler_spark.oracle import crawl_oracle_polite
+
+    def page(*links):
+        return "<html><body>" + "".join(
+            f'<a href="{u}">x</a>' for u in links
+        ) + "</body></html>"
+
+    a0, a1, a2 = (f"https://a.example.com/{i}" for i in range(3))
+    b0 = "https://b.example.com/0"
+    x = "https://e.example.com/x"
+    y0 = "https://y.example.com/0"
+    corpus = {
+        a0: page(b0), a1: page(), a2: page(x), b0: page(x), x: page(y0), y0: page(),
+    }
+    cfg = CrawlConfig(max_depth=1, per_host_budget=1)
+    oracle = crawl_oracle_polite(corpus, [a0, a1, a2], cfg)
+    assert y0 in oracle.queue_order  # x really was traversed late
+
+    pages_df = spark.createDataFrame(
+        [(u, h.encode()) for u, h in corpus.items()], "url string, html binary"
+    )
+    result = run_crawl(spark, pages_df, [a0, a1, a2], cfg)
+    got = [r["url"] for r in result.queue.collect()]
+    assert got == oracle.queue_order
+    assert result.rounds_run == oracle.rounds
+    docs = {r["url"]: r["pos"] for r in result.docs.collect()}
+    assert docs == {u: i for i, u in enumerate(oracle.queue_order)}
 
 
 def test_robots_query_string_prefix(spark):
@@ -502,7 +557,6 @@ def test_timed_politeness_matches_oracle(spark, tiny_pages_df, tiny_corpus):
     per-round budget alone cannot express; queue order and round count must
     still match the sequential oracle exactly."""
     from webcrawler_spark.oracle import crawl_oracle_polite
-    from webcrawler_spark.rounds import run_polite_crawl
 
     cfg = CrawlConfig(max_depth=2, per_host_budget=3, politeness_window_ms=10_000)
     hosts = sorted({u.split("/")[2] for u in tiny_corpus.pages})
@@ -514,7 +568,7 @@ def test_timed_politeness_matches_oracle(spark, tiny_pages_df, tiny_corpus):
     delays_df = spark.createDataFrame(
         [(h, d) for h, d in delay_of.items()], "host string, crawl_delay_ms long"
     )
-    result = run_polite_crawl(
+    result = run_crawl(
         spark, tiny_pages_df, tiny_corpus.seeds, cfg, delays=delays_df,
         with_processor=False,
     )
@@ -572,40 +626,89 @@ def _stop_after(n_rounds):
 
 
 @pytest.mark.slow
-def test_stop_then_resume_matches_straight_run(spark, pages_df, small_corpus, tmp_path):
+@pytest.mark.parametrize("mode", ["plain", "polite", "timed"])
+def test_stop_then_resume_matches_straight_run(
+    spark, pages_df, small_corpus, tmp_path, request, mode
+):
     """O2 cancellation (CrawlerService.java:134-151): stopping between rounds
     commits a resumable boundary; resume completes to the exact same queue
-    order and docs as an uninterrupted crawl."""
+    order and docs as an uninterrupted crawl. The polite cases stop while
+    deferred urls are pending, so the commit must carry the deferred frontier
+    (grank/depth), the discovery and fetch counters and, timed, the per-host
+    clocks; the polite resume also runs after snapshot expiry."""
+    from pyspark.sql import functions as F
+
+    from webcrawler_spark.oracle import crawl_oracle_polite
     from webcrawler_spark.storage import SnapshotStore
 
-    cfg = CrawlConfig(max_depth=2)
-    entry = small_corpus.seeds[0]
+    kw, oracle = {}, None
+    if mode == "plain":
+        cfg, pages, n_stop = CrawlConfig(max_depth=2), pages_df, 1
+        entry = small_corpus.seeds[0]
+    else:
+        corpus = request.getfixturevalue("tiny_corpus")
+        pages = request.getfixturevalue("tiny_pages_df")
+        entry, n_stop = corpus.seeds, 2
+        pages_dict = {u: h for u, (t, h, l) in corpus.pages.items()}
+        if mode == "polite":
+            cfg = CrawlConfig(max_depth=2, per_host_budget=2)
+            rob = {r["host"]: r["disallow"] for r in corpus.robots}
+            kw["robots"] = spark.createDataFrame(
+                [{"host": h, "disallow": d} for h, d in rob.items()]
+            )
+            oracle = crawl_oracle_polite(pages_dict, entry, cfg, robots=rob)
+        else:
+            cfg = CrawlConfig(max_depth=2, per_host_budget=2, politeness_window_ms=10_000)
+            hosts = sorted({u.split("/")[2] for u in corpus.pages})
+            delay_of = {h: [0, 2_000, 25_000, 4_000][i % 4] for i, h in enumerate(hosts)}
+            kw["delays"] = spark.createDataFrame(
+                list(delay_of.items()), "host string, crawl_delay_ms long"
+            )
+            oracle = crawl_oracle_polite(
+                pages_dict, entry, cfg, delays=delay_of, window_ms=10_000
+            )
+
+    def digest(res):
+        docs = sorted(
+            (r["url"], r["status"], r["pos"], r["content_length"])
+            for r in res.docs.collect()
+        )
+        return [r["url"] for r in res.queue.collect()], docs
 
     full = run_crawl(
-        spark, pages_df, entry, cfg, store=SnapshotStore(str(tmp_path / "full"))
+        spark, pages, entry, cfg, store=SnapshotStore(str(tmp_path / "full")), **kw
     )
-    q_full = [r["url"] for r in full.queue.collect()]
-    docs_full = sorted(
-        (r["url"], r["status"], r["pos"], r["content_length"])
-        for r in full.docs.collect()
-    )
+    q_full, docs_full = digest(full)
 
     store = SnapshotStore(str(tmp_path / "stopresume"))
-    part = run_crawl(spark, pages_df, entry, cfg, store=store, stop=_stop_after(1))
+    part = run_crawl(
+        spark, pages, entry, cfg, store=store, stop=_stop_after(n_stop), **kw
+    )
     assert part.stopped
     assert part.docs is None
-    assert part.rounds_run == 1
+    assert part.rounds_run == n_stop
     m = store.load_manifest()
-    assert m is not None and m.meta["stopped_next_depth"] == 1
+    assert m is not None and m.meta["stopped_next_depth"] == n_stop
+    assert m.committed_round == n_stop - 1
+    if oracle is not None:
+        # the stop really left deferred urls pending in the frontier
+        last = store.read_table(spark, "round", n_stop - 1)
+        assert last.filter(F.col("_dup").isNull()).count() > 0
+    if mode == "polite":
+        store.expire_snapshots(keep_last=1)
 
-    res = run_crawl(spark, pages_df, entry, cfg, store=store, resume=True)
+    res = run_crawl(spark, pages, entry, cfg, store=store, resume=True, **kw)
     assert not res.stopped
-    assert [r["url"] for r in res.queue.collect()] == q_full
-    docs_res = sorted(
-        (r["url"], r["status"], r["pos"], r["content_length"])
-        for r in res.docs.collect()
-    )
+    q_res, docs_res = digest(res)
+    assert q_res == q_full
     assert docs_res == docs_full
+    if oracle is not None:
+        assert q_res == oracle.queue_order
+        assert {r["url"] for r in res.seen.collect()} == oracle.seen
+        assert {(u, st) for u, st, _, _ in docs_res} == {
+            (d["url"], d["status"]) for d in oracle.docs
+        }
+        assert n_stop + res.rounds_run == oracle.rounds
     # the stop marker is cleared on completion
     assert store.load_manifest().meta.get("stopped_next_depth") is None
 
@@ -631,7 +734,7 @@ def test_bloom_round_caches_released(spark, pages_df, small_corpus, monkeypatch)
     cfg = CrawlConfig(max_depth=2)
     R.run_crawl(
         spark, pages_df, small_corpus.seeds[0], cfg,
-        with_processor=False, use_bloom=True,
+        with_processor=False, seen_filter="bloom",
     )
     regs = [df for reg in registries for df in reg]
     assert regs  # the bloom path really persisted something
@@ -653,14 +756,14 @@ def test_bloom_sidecar_persisted_and_loaded_on_resume(
     entry = small_corpus.seeds[0]
     full = R.run_crawl(
         spark, pages_df, entry, cfg,
-        store=SnapshotStore(str(tmp_path / "full")), use_bloom=True,
+        store=SnapshotStore(str(tmp_path / "full")), seen_filter="bloom",
     )
     q_full = [r["url"] for r in full.queue.collect()]
 
     store = SnapshotStore(str(tmp_path / "sr"))
     part = R.run_crawl(
         spark, pages_df, entry, cfg, store=store, stop=_stop_after(1),
-        use_bloom=True,
+        seen_filter="bloom",
     )
     assert part.stopped
     m = store.load_manifest()
@@ -679,7 +782,7 @@ def test_bloom_sidecar_persisted_and_loaded_on_resume(
     # call time, so patching the module intercepts both build and maintain
     monkeypatch.setattr(D, "bloom_sidecar_build", build_spy)
     res = R.run_crawl(
-        spark, pages_df, entry, cfg, store=store, resume=True, use_bloom=True
+        spark, pages_df, entry, cfg, store=store, resume=True, seen_filter="bloom"
     )
     assert [r["url"] for r in res.queue.collect()] == q_full
     # only the per-round DELTA builds ran — no full-seen rebuild at resume
@@ -772,7 +875,6 @@ def test_timed_with_global_and_concurrency_caps(spark, tiny_pages_df, tiny_corpu
     global QPS budget + maxConcurrentPerDomain — the timed clock must advance
     only by URLs actually served AFTER the global cut."""
     from webcrawler_spark.oracle import crawl_oracle_polite
-    from webcrawler_spark.rounds import run_polite_crawl
 
     cfg = CrawlConfig(
         max_depth=2, per_host_budget=3, politeness_window_ms=10_000,
@@ -787,7 +889,7 @@ def test_timed_with_global_and_concurrency_caps(spark, tiny_pages_df, tiny_corpu
     delays_df = spark.createDataFrame(
         [(h, d) for h, d in delay_of.items()], "host string, crawl_delay_ms long"
     )
-    result = run_polite_crawl(
+    result = run_crawl(
         spark, tiny_pages_df, tiny_corpus.seeds, cfg, delays=delays_df,
         with_processor=False,
     )

@@ -27,7 +27,6 @@ into the persisted sidecar — never a rebuild over the full seen table.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
@@ -49,10 +48,6 @@ from pyspark.sql.types import (
 BLOOM_BITS_PER_KEY = 10          # ~1% fpr with k=7
 BLOOM_K = 7
 BLOOM_SEED2 = 0x9E3779B9         # second xxhash64 column's extra input
-
-
-def _bloom_size_bits(n_keys: int) -> int:
-    return max(1024, 1 << int(math.ceil(math.log2(max(1, n_keys) * BLOOM_BITS_PER_KEY))))
 
 
 def bloom_hash_cols(url: Column) -> Tuple[Column, Column]:

@@ -348,7 +348,7 @@ def crawl_oracle_polite(
     """The reference BFS extended with the *designed* politeness + robots
     semantics (README.md:55-57,145-147 — declared, never implemented there;
     north_rule requires them). Definitions this oracle fixes, mirrored by
-    rounds.run_polite_crawl:
+    the admission stage of rounds.run_crawl:
 
     - pending frontier is a deque in global discovery order; each ROUND admits,
       per host, the first ``per_host_budget`` pending URLs in that order; the

@@ -1,21 +1,23 @@
 """The crawl driver: the reference's BFS control flow restated as batch rounds.
 
-One round = one idempotent Spark batch job per depth level (SURVEY §3.1
-"Spark restatement"):
+``run_crawl`` is the one round loop (SURVEY §3.1 "Spark restatement"). One
+round is one idempotent set of Spark batch jobs over the pending frontier:
 
-    traverse_d ⋈ pages (url)                       -- "fetch" against the corpus
+    frontier → admission (identity, or per-host politeness budgets + robots)
+      → admitted ⋈ pages (url)                    -- "fetch" against the corpus
       → extraction kernel (mapInPandas)            -- title/segments/links
-      → posexplode(links) → normalize → rlike filter
+      → explode(links) → rlike filter
       → first-occurrence (groupBy url, min(parent_rank, link_pos))
-      → seen-flag join → bucketed global rank → append to queue/url_seen
-      → traversal slice → traverse_{d+1}
+      → seen-flag + visited joins → bucketed global rank → append to url_seen
+      → traversal slice ∪ deferred rows → next frontier
 
 The §2.2 order theorem makes the distributed queue order equal the reference's
 single-threaded FIFO drain order: enqueue order is (depth, parent's dequeue
 rank within depth, link position in the parent document), dedup keeps first
-occurrence only. maxDepth semantics (harvest-but-don't-traverse,
-CrawlerService.java:127-131) and the entry-enqueue-only-with-processor guard
-(:110-116) are mirrored exactly.
+occurrence only. With admission as the identity a round is one depth level.
+maxDepth semantics (harvest-but-don't-traverse, CrawlerService.java:127-131)
+and the entry-enqueue-only-with-processor guard (:110-116) are mirrored
+exactly; politeness semantics are fixed by oracle.crawl_oracle_polite.
 
 Scale design (north_rule: ≥0.8 scaling efficiency N→4N): a round runs at most
 THREE driver-synchronized jobs —
@@ -34,10 +36,10 @@ THREE driver-synchronized jobs —
    single-partition row_number, no range-sampling pass), and the resulting
    round table is checkpointed (or written to the SnapshotStore).
 
-Rank bucketing needs no RangePartitioner: parent ranks are dense in
-[0, frontier), so floor(parent_rank·nb/frontier) is an explicit, deterministic,
-monotone bucket id — value-determined, hence stable across job re-runs without
-pinning a physical layout.
+Rank bucketing needs no RangePartitioner: parent ranks lie in the pending
+frontier's global discovery-rank span [lo, hi), so floor((rank-lo)·nb/(hi-lo))
+is an explicit, deterministic, monotone bucket id — value-determined, hence
+stable across job re-runs without pinning a physical layout.
 
 Checkpoint/resume: with a SnapshotStore, each round's table is written and
 re-read (also truncating the lineage DAG); the manifest commits the round
@@ -51,7 +53,7 @@ import os
 import threading
 import time
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence, Set, Tuple
+from typing import Dict, List, Optional, Set, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -74,11 +76,7 @@ from .functions import (
     parse_host,
 )
 from .kernel.urlnorm import normalize_url
-from .operators.dedup import (
-    anti_join_new,
-    flag_seen,
-    seen_filter_ops,
-)
+from .operators.dedup import flag_seen, seen_filter_ops
 from .operators.ordering import first_occurrence
 from .storage import Manifest, SnapshotStore
 from .udfs import extract_schema_with, make_extract_pages, normalize_url_udf
@@ -117,8 +115,6 @@ FRONTIER_ROW_BYTES = 96
 BROADCAST_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_BROADCAST_MAX_BYTES", str(256 * 1024 * 1024))
 )
-# back-compat alias for tests/jobs that import the old row gate
-BROADCAST_FRONTIER_ROWS = BROADCAST_MAX_BYTES // FRONTIER_ROW_BYTES
 
 # Frontiers at or under this many rows are round-robin repartitioned before
 # the Python parse stage; larger ones run on the scan-partition layout.
@@ -163,7 +159,7 @@ def _balance_for_parse(
 SEED_COLLECT_MAX = 250_000
 
 
-def _seed_df(spark: SparkSession, starts: List[str], extra: tuple) -> DataFrame:
+def _seed_df(spark: SparkSession, starts: List[str]) -> DataFrame:
     """Distributed, materialized seed frontier from a driver-side list.
 
     Built via the Arrow (pandas) path and immediately localCheckpointed:
@@ -174,27 +170,22 @@ def _seed_df(spark: SparkSession, starts: List[str], extra: tuple) -> DataFrame:
     """
     import pandas as pd
 
-    cols = {"url": starts}
-    fields = [StructField("url", StringType())]
-    if "rank" in extra:
-        cols["rank"] = list(range(len(starts)))
-        fields.append(StructField("rank", LongType()))
-    if "grank" in extra:
-        cols["grank"] = list(range(len(starts)))
-        fields.append(StructField("grank", LongType()))
-    if "depth" in extra:
-        cols["depth"] = [0] * len(starts)
-        fields.append(StructField("depth", IntegerType()))
+    cols = {"url": starts, "grank": range(len(starts)), "depth": [0] * len(starts)}
+    fields = [
+        StructField("url", StringType()),
+        StructField("grank", LongType()),
+        StructField("depth", IntegerType()),
+    ]
     df = spark.createDataFrame(pd.DataFrame(cols), StructType(fields))
     par = spark.sparkContext.defaultParallelism
     return df.repartition(par).localCheckpoint(eager=True)
 
 
 def _seed_frontier(
-    spark: SparkSession, entry_url, extra: tuple,
-    timings: Optional[List[dict]] = None,
+    spark: SparkSession, entry_url, timings: Optional[List[dict]] = None,
 ) -> Tuple[Optional[DataFrame], int]:
-    """Normalize/dedup/rank the seed list into the round-0 frontier.
+    """Normalize/dedup/rank the seed list into the round-0 frontier
+    (url, grank, depth = 0).
 
     ``entry_url`` may be a single URL, a Python list (reference semantics /
     README seed-list design), or a **DataFrame** with a ``url`` column and an
@@ -216,7 +207,7 @@ def _seed_frontier(
         if seeds.count() <= SEED_COLLECT_MAX:
             s = seeds.orderBy("seed_id") if "seed_id" in seeds.columns else seeds
             entry_url = [r["url"] for r in s.select("url").collect()]
-            return _seed_frontier(spark, entry_url, extra, timings=timings)
+            return _seed_frontier(spark, entry_url, timings=timings)
         if timings is not None:
             # observable evidence that frontier-sized seed lists never
             # materialize on the driver (VERDICT r2 #7): surfaced in the
@@ -249,15 +240,11 @@ def _seed_frontier(
         }
         off, _ = _offset_map_expr("_bkt", counts, 0)
         w = Window.partitionBy("_bkt").orderBy("seed_id")
-        out_cols = [F.col("url")]
-        rank_col = (F.row_number().over(w) - 1 + off).cast("long")
-        if "rank" in extra:
-            out_cols.append(rank_col.alias("rank"))
-        if "grank" in extra:
-            out_cols.append(rank_col.alias("grank"))
-        if "depth" in extra:
-            out_cols.append(F.lit(0).alias("depth"))
-        frontier = b.select(*out_cols).localCheckpoint(eager=True)
+        frontier = b.select(
+            "url",
+            (F.row_number().over(w) - 1 + off).cast("long").alias("grank"),
+            F.lit(0).alias("depth"),
+        ).localCheckpoint(eager=True)
         first.unpersist()
         return frontier, n_seeds
 
@@ -271,7 +258,7 @@ def _seed_frontier(
             starts.append(n)
     if not starts:
         return None, 0
-    return _seed_df(spark, starts, extra), len(starts)
+    return _seed_df(spark, starts), len(starts)
 
 
 def _bucket_expr(col: Column, hi: int, nb: int) -> Column:
@@ -296,37 +283,6 @@ def _offset_map_expr(
     if not kv:
         return F.lit(start), acc
     return F.element_at(F.create_map(*kv), F.col(bucket_col)), acc
-
-
-def _fill_lineage_hosts(lineage: List[dict], seen: DataFrame) -> None:
-    """Backfill ``hosts_served`` for this crawl's lineage rows in ONE
-    count_distinct job over the (column-pruned) url_seen table, instead of a
-    distinct aggregate inside every round's stats pass. new_seen rows carry
-    (host_hash, first_depth), and lineage partition_id = host_hash % 32 by
-    construction, so distinct hosts per (round, partition) is exactly
-    distinct host_hash per (first_depth, host_hash % 32). Rows loaded from a
-    resume checkpoint already carry values and are left untouched (only
-    ``None`` placeholders fill)."""
-    need_rounds = sorted(
-        {l["round"] for l in lineage if l.get("hosts_served") is None}
-    )
-    if not need_rounds:
-        return
-    rows = (
-        seen.filter(F.col("first_depth").isin(need_rounds))
-        .groupBy(
-            F.col("first_depth").alias("_r"),
-            F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS))
-            .cast("int")
-            .alias("_p"),
-        )
-        .agg(F.count_distinct("host_hash").alias("h"))
-        .collect()
-    )
-    m = {(r["_r"], r["_p"]): r["h"] for r in rows}
-    for l in lineage:
-        if l.get("hosts_served") is None:
-            l["hosts_served"] = m.get((l["round"], l["partition_id"]), 0)
 
 
 class _AsyncDF:
@@ -409,44 +365,104 @@ def run_crawl(
     config: CrawlConfig,
     store: Optional[SnapshotStore] = None,
     with_processor: bool = True,
-    use_bloom: bool = False,
     seen_filter: Optional[str] = None,
     crawl_ts: str = "2025-06-01 00:00:00",
     stop=None,
     resume: bool = False,
+    robots: Optional[DataFrame] = None,
+    salt_threshold: Optional[int] = None,
+    n_salts: int = 16,
+    delays: Optional[DataFrame] = None,
+    max_rounds: int = 10_000,
 ) -> CrawlResult:
-    """CrawlerService.crawl(entryUrl, waitForCompletion=True) as batch rounds.
+    """CrawlerService.crawl(entryUrl, waitForCompletion=True) as batch rounds,
+    with per-host politeness admission as one stage of every round.
 
     ``entry_url`` may be a single URL (reference semantics), a seed list
     (README.md seed-list design), or a seeds DataFrame (url [, seed_id]):
-    seeds occupy queue positions 0..n-1 in list order with first-occurrence
-    dedup, and round 0 traverses all of them.
+    seeds take global discovery ranks 0..n-1 in list order with
+    first-occurrence dedup, and round 0 traverses all of them.
+
+    Admission (semantics fixed by oracle.crawl_oracle_polite; the reference
+    only *designed* them: README.md:55-57,145-147). With no politeness
+    configured it is the identity and a round is exactly one BFS depth level.
+    Otherwise each round admits, per host, the first ``config.per_host_budget``
+    pending URLs in global discovery order (``maxConcurrentPerDomain`` mins
+    into that cap, ``globalQps`` and ``maxPages`` prefix-cut the admitted set
+    globally); the rest defer unchanged to the next round. Robots-blocked URLs
+    consume budget, produce no links, and process as SKIPPED_ROBOTS docs. Hot
+    hosts can be salted (``salt_threshold``) at the documented cost of
+    per-salt-only ordering. With a ``delays`` table (host, crawl_delay_ms) the
+    budget is TIMED (admission.timed_admit): per-host ``next_allowed_ts``
+    clocks carry between rounds (config.politeness_window_ms per round);
+    mutually exclusive with salting.
+
+    Seeds are enqueued with the processor (CrawlerService.java:110-116) and
+    always under politeness (crawl_oracle_polite); a plain crawl without the
+    processor leaves them out of the queue.
+
+    Traversal candidates take the first DEPTH-ELIGIBLE harvest (child_depth
+    <= maxDepth), matching the oracle's per-event push rule even when a
+    deferred shallow parent and a max-depth parent harvest the same URL in
+    one round; the enqueue position still follows the global first harvest.
+    Both first-occurrences come out of ONE url-grouped aggregate.
 
     Cancellation (O2 — CrawlerService.stopCrawl()/awaitTermination,
     CrawlerService.java:134-151): ``stop`` is a zero-arg callable polled
     between rounds — the batch analogue of cancelling the worker pool, where
     a "round" is the smallest unit that leaves consistent state. When it
     returns True the crawl halts, and with a ``store`` the full loop state
-    (url_seen, the pending frontier, the visited set, prior lineage and the
-    scalar counters) is committed so ``resume=True`` on the same store
-    continues from the exact round boundary — seeds/entry must match. A
-    stopped result has ``stopped=True`` and no docs (the docs pass runs only
-    at natural completion; a resumed run covers the whole queue, reusing
-    every previously persisted per-round raw parse).
+    (url_seen, the pending frontier with its deferred rows, the visited set,
+    the timed host clocks, prior lineage and the scalar counters) is
+    committed so ``resume=True`` on the same store continues from the exact
+    round boundary — seeds/entry/config must match. A stopped result has
+    ``stopped=True`` and no docs (the docs pass runs only at natural
+    completion; a resumed run covers the whole queue, reusing every
+    previously persisted per-round raw parse).
     """
+    from .operators.admission import (
+        _min_cap,
+        admit,
+        apply_robots,
+        global_cap_admit,
+        salted_admit,
+        timed_admit,
+    )
+    from .operators.contentgate import skip_status_col
+
+    if delays is not None and salt_threshold is not None:
+        raise ValueError("timed politeness and salted admission are exclusive")
     _t0 = time.monotonic()
-    # url-seen sidecar strategy: seen_filter ('bloom' | 'cuckoo') or the
-    # legacy use_bloom flag (== 'bloom'); None = exact joins only
-    _sf = seen_filter_ops(seen_filter or "bloom") if (seen_filter or use_bloom) else None
+    budget = config.per_host_budget
+    max_conc = config.max_concurrent_per_domain
+    # globalQps → per-round global admission budget (README.md:55-57)
+    global_cap = (
+        int(config.global_qps * config.politeness_window_ms / 1000)
+        if config.global_qps is not None
+        else None
+    )
+    # maxPages (README.md:50,:144): total admitted-fetch budget per job; the
+    # in-round remainder rides the same global prefix-cut as globalQps
+    max_pages = config.max_pages
+    if max_pages is not None and max_pages <= 0:
+        max_rounds = 0  # zero fetch budget: seeds stay discovered, no rounds
+    # admission is the identity unless some politeness knob is set
+    polite = any(
+        x is not None
+        for x in (budget, max_conc, global_cap, max_pages, robots, delays, salt_threshold)
+    )
+    enqueue_seeds = with_processor or polite
+    _sf = seen_filter_ops(seen_filter) if seen_filter else None
+
     _seed_marks: List[dict] = []
-    traverse, n_seeds = _seed_frontier(spark, entry_url, ("rank",), timings=_seed_marks)
+    traverse, n_seeds = _seed_frontier(spark, entry_url, timings=_seed_marks)
     if traverse is None:
         return _empty_result(spark, with_processor)
-    if with_processor:
-        # queue position rides on the traversal frontier so the round's parse
-        # output is a complete raw doc (single-parse: see loop below); seeds
-        # occupy pos 0..n-1 = their rank
-        traverse = traverse.withColumn("pos", F.col("rank").cast("long"))
+    # the frontier carries each url's queue position so a round's parse
+    # output is a complete raw doc (single-parse, below); seeds hold pos 0..n-1
+    traverse = traverse.withColumn(
+        "pos", (F.col("grank") if enqueue_seeds else F.lit(None)).cast("long")
+    )
     res = CrawlResult(queue=None, seen=None, visited=None, docs=None)  # type: ignore[arg-type]
     res.timings.extend(_seed_marks)
     res.timings.append({"phase": "seed_frontier", "ms": int((time.monotonic() - _t0) * 1000)})
@@ -454,15 +470,11 @@ def run_crawl(
     max_depth = max(0, config.max_depth)
     nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # With the processor, seeds are enqueued (CrawlerService.java:110-116) and
-    # the seen set and traversal set then evolve IDENTICALLY (both gain
-    # exactly the round's first-occurrence anti-seen rows) — one flag serves
-    # both. Without it, the sets differ and a second visited-flag join runs.
     visited = traverse.select("url")
-    if with_processor:
+    if enqueue_seeds:
         seen = traverse.select(
             "url",
-            F.col("rank").cast("long").alias("pos"),
+            "pos",
             host_hash_col(parse_host(F.col("url"))).alias("host_hash"),
             F.lit(0).alias("first_depth"),
         )
@@ -470,23 +482,39 @@ def run_crawl(
     else:
         seen = spark.createDataFrame([], SEEN_SCHEMA)
         queue_size = 0
+    # global discovery ranks handed out so far; the pending frontier's ranks
+    # lie in [frontier_lo, discovered)
+    discovered = n_seeds
+    frontier_lo = 0
+    frontier_rows = n_seeds
+    fetched_total = 0  # admitted fetches so far (maxPages; docs-pass sizing)
 
-    # the bloom sidecar is built AFTER the resume block below: a resume either
+    # the seen sidecar is built AFTER the resume block below: a resume either
     # loads the persisted sidecar table or rebuilds from the restored seen set
-    # — building one from the seed seen here would be thrown away either way
     sidecar = None
+    host_state = None
+    if delays is not None:
+        host_state = spark.createDataFrame(
+            [], "host string, next_allowed_ts long"
+        ).localCheckpoint(eager=True)
 
     # Single-parse (WebPageProcessor parses each page ONCE for both links and
     # content): in processor mode the round's link-harvest parse also carries
     # the docs payload (title/segments/links from the same kernel call) plus
     # the P2 fidelity columns, and each round's raw extraction is persisted.
     # The final docs pass then re-parses only the queue tail that no round
-    # ever traversed (children harvested at maxDepth, CrawlerService.java:127-131)
-    # instead of re-fetching and re-parsing the whole queue.
+    # ever traversed (children harvested at maxDepth, CrawlerService.java:127-131,
+    # and URLs admission never reached) instead of the whole queue.
+    carry_fields = [
+        StructField("grank", LongType()),
+        StructField("depth", IntegerType()),
+        StructField("pos", LongType()),
+    ]
+    pages_src = pages
+    fetch_cols = ["url", "html"]
     if with_processor:
         from pyspark.sql.types import TimestampType
 
-        pages_src = pages
         if "http_status" not in pages_src.columns:
             pages_src = pages_src.withColumn("http_status", F.lit(200))
         if "fetch_ms" not in pages_src.columns:
@@ -497,24 +525,16 @@ def run_crawl(
             pages_src = pages_src.withColumn(
                 "warc_ts", F.lit(None).cast("timestamp")
             )
-        carry_fields = [
-            StructField("rank", LongType()),
-            StructField("pos", LongType()),
+        carry_fields += [
             StructField("lang", StringType()),
             StructField("warc_ts", TimestampType()),
             StructField("http_status", IntegerType()),
             StructField("fetch_ms", LongType()),
         ]
-        fetch_cols = ["url", "html", "lang", "warc_ts", "http_status", "fetch_ms"]
-    else:
-        pages_src = pages
-        carry_fields = [StructField("rank", LongType())]
-        fetch_cols = ["url", "html"]
+        fetch_cols += ["lang", "warc_ts", "http_status", "fetch_ms"]
     # content gate for the traversal parse: a disallowed-type / oversize
-    # fetch must never enter the kernel, so it harvests no links; the final
-    # docs pass re-encounters the row and emits its SKIPPED_* status
-    from .operators.contentgate import skip_status_col
-
+    # fetch consumes its admission slot but never enters the kernel, so it
+    # harvests no links; the final docs pass emits its SKIPPED_* status
     gate_skip = skip_status_col(
         config.allowed_content_types,
         config.max_content_bytes,
@@ -528,16 +548,14 @@ def run_crawl(
     )
     extract_out = extract_schema_with(carry_fields)
     raw_parts: List[DataFrame] = []
-    fetched_est = 0
 
     lineage: List[dict] = []
     # background round-table durability writes in flight; each MUST be
     # joined before any manifest commit (a committed manifest must never
     # reference a half-written table)
     pending_writes: List[_AsyncDF] = []
-    frontier_rows = n_seeds
 
-    start_depth = 0
+    start_round = 0
     resumed_had_rules = False
     if resume and store is not None:
         m = store.load_manifest()
@@ -548,82 +566,135 @@ def run_crawl(
             resumed_had_rules = bool(m.meta.get("has_content_rules", False))
             # pick the crawl back up at the committed round boundary: every
             # table below was written atomically by the stop path
-            start_depth = int(m.meta["stopped_next_depth"])
-            # read url_seen at its MANIFEST version, not at start_depth:
+            start_round = int(m.meta["stopped_next_depth"])
+            # read url_seen at its MANIFEST version, not at start_round:
             # jobs/recrawl.py --evict commits an evicted url_seen at a LATER
             # version than the stop snapshot, and resuming from the stale
             # pre-eviction table would silently never re-admit due urls
             # (ADVICE r4)
             seen = store.read_table(
-                spark, "url_seen", int(m.tables.get("url_seen", start_depth))
+                spark, "url_seen", int(m.tables.get("url_seen", start_round))
             )
-            traverse = store.read_table(spark, "frontier", start_depth)
-            visited = store.read_table(spark, "visited", start_depth)
+            traverse = store.read_table(spark, "frontier", start_round)
+            visited = store.read_table(spark, "visited", start_round)
+            if host_state is not None:
+                host_state = store.read_table(spark, "host_state", start_round)
             queue_size = int(m.meta["queue_size"])
             frontier_rows = int(m.meta["frontier_rows"])
-            fetched_est = int(m.meta.get("fetched_est", 0))
+            fetched_total = int(m.meta["fetched_total"])
+            discovered = int(m.meta["discovered"])
+            frontier_lo = int(m.meta["frontier_lo"])
             if with_processor:
+                # a raw_docs version removed by expire_snapshots only costs
+                # speed: the docs pass re-parses its urls as queue tail
                 raw_parts = [
                     store.read_table(spark, "raw_docs", d)
-                    for d in range(start_depth)
+                    for d in store.list_versions("raw_docs")
+                    if d < start_round
                 ]
             lineage = [
                 r.asDict() for r in store.read_table(
-                    spark, "lineage_ckpt", start_depth
+                    spark, "lineage_ckpt", start_round
                 ).collect()
             ]
             _sv = m.tables.get(f"{_sf.kind}_sidecar") if _sf is not None else None
-            if _sv is not None and int(_sv) >= start_depth:
+            if _sv is not None and int(_sv) >= start_round:
                 # the stop path persisted the sidecar — load it instead of
                 # the O(|seen|) rebuild (at 10^10 seen URLs the rebuild is a
                 # full table pass before round 1). The manifest version may be
-                # NEWER than start_depth: jobs/recrawl.py --evict deletes due
+                # NEWER than start_round: jobs/recrawl.py --evict deletes due
                 # fingerprints in place and commits the sidecar at version+1
-                # (ADVICE r4). A legacy snapshot without the table, or one
-                # older than the stop point, falls through to the rebuild.
+                # (ADVICE r4). A snapshot without the table, or one older
+                # than the stop point, falls through to the rebuild.
                 sidecar = store.read_table(spark, f"{_sf.kind}_sidecar", int(_sv))
 
     if _sf is not None and sidecar is None:
         sidecar = _sf.build(seen).localCheckpoint(eager=True)
 
     stopped_at: Optional[int] = None
-    for depth in range(start_depth, max_depth + 1):
+    for rnd in range(start_round, max_rounds):
         if stop is not None and stop():
-            stopped_at = depth
+            stopped_at = rnd
             break
         t0 = time.monotonic()
-        trav_side = _frontier_side(traverse, frontier_rows)
-        fetched = pages_src.select(*fetch_cols).join(trav_side, "url", "inner")
+
+        # ---- admission: identity without politeness, else per-host budgets
+        # (+ global cap) over the pending frontier in discovery order
+        allowed, deferred = traverse, None
+        if polite:
+            eff_cap = global_cap
+            if max_pages is not None:
+                rem = max(0, max_pages - fetched_total)
+                eff_cap = rem if eff_cap is None else min(eff_cap, rem)
+            tr = traverse.withColumn("host", parse_host(F.col("url")))
+            if delays is not None:
+                allowed, deferred, new_state = timed_admit(
+                    tr, budget, delays, host_state,
+                    window_ms=config.politeness_window_ms, rnd=rnd,
+                    order_cols=("grank",), host_col="host",
+                    max_concurrent=max_conc, global_cap=eff_cap,
+                )
+                # tiny table (one row per host ever served); eager so the
+                # round's clock advance is pinned before the frontier mutates
+                host_state = new_state.localCheckpoint(eager=True)
+            else:
+                if salt_threshold is not None:
+                    # max_concurrent is just another per-host cap: min it into
+                    # the budget BEFORE the per-salt split (per-salt
+                    # enforcement of a cross-salt cap would defeat salting)
+                    allowed, deferred = salted_admit(
+                        tr.withColumn("rank", F.col("grank")),
+                        _min_cap(budget, max_conc),
+                        order_cols=("grank",), host_col="host",
+                        salt_threshold=salt_threshold, n_salts=n_salts,
+                    )
+                    allowed, deferred = allowed.drop("rank"), deferred.drop("rank")
+                else:
+                    allowed, deferred = admit(
+                        tr, budget, order_cols=("grank",), host_col="host",
+                        max_concurrent=max_conc,
+                    )
+                allowed, deferred = global_cap_admit(
+                    allowed, deferred, eff_cap, order_cols=("grank",)
+                )
+            if robots is not None:
+                allowed, _blocked = apply_robots(allowed, robots)
+            allowed, deferred = allowed.drop("host"), deferred.drop("host")
+
+        fetched = pages_src.select(*fetch_cols).join(
+            _frontier_side(allowed, frontier_rows), "url", "inner"
+        )
         if gate_skip is not None:
             fetched = fetched.filter(gate_skip.isNull()).drop("content_type")
         fetched = _balance_for_parse(spark, fetched, frontier_rows)
         extracted = fetched.mapInPandas(extract_fn, extract_out)
-        fetched_est += frontier_rows
 
         if with_processor:
-            # materialize the round's parse output once (job A); the stats
-            # job and the final docs assembly both read it back — the page is
-            # never parsed again. `text` is redundant with segments for docs
-            # and excluded to keep the raw table lean.
+            # materialize the round's parse output once (job A); the harvest
+            # below and the final docs assembly both read it back — the page
+            # is never parsed again. `text` is redundant with segments for
+            # docs and excluded to keep the raw table lean.
             _tr = time.monotonic()
             raw = extracted.drop("text").withColumn("_ckey", _content_key())
             if store is not None:
-                store.write_table(raw, "raw_docs", depth)
-                raw = store.read_table(spark, "raw_docs", depth)
+                store.write_table(raw, "raw_docs", rnd)
+                raw = store.read_table(spark, "raw_docs", rnd)
             else:
                 raw = raw.localCheckpoint(eager=True)
             raw_parts.append(raw)
             extracted = raw
             res.timings.append(
-                {"phase": f"r{depth}_raw", "ms": int((time.monotonic() - _tr) * 1000)}
+                {"phase": f"r{rnd}_raw", "ms": int((time.monotonic() - _tr) * 1000)}
             )
 
         # hrefs come out of the kernel already normalized and null-free
         links = extracted.select(
-            F.col("rank").alias("parent_rank"),
+            F.col("grank").alias("parent_rank"),
+            (F.col("depth") + 1).alias("child_depth"),
             F.explode("links").alias("link"),
         ).select(
             "parent_rank",
+            "child_depth",
             F.col("link.pos").alias("link_pos"),
             F.col("link.href").alias("url"),
         )
@@ -632,29 +703,62 @@ def run_crawl(
                 F.col("url"), config.include_url_patterns, config.exclude_url_patterns
             )
         )
-        # first occurrence within the round (intra-round self-dedup) then the
-        # seen flag — a LEFT join (not anti) so dup rows ride into the stats
-        first = first_occurrence(accepted, "url", ["parent_rank", "link_pos"])
+        # one url-grouped pass, two first-occurrences: global (enqueue pos)
+        # and depth-eligible (traversal push) — min skips the masked nulls
+        packed = accepted.groupBy("url").agg(
+            F.min(F.struct("parent_rank", "link_pos", "child_depth")).alias("_o"),
+            F.min(
+                F.when(
+                    F.col("child_depth") <= max_depth,
+                    F.struct("parent_rank", "link_pos", "child_depth"),
+                )
+            ).alias("_oe"),
+        )
+        first = packed.select(
+            "url",
+            F.col("_o.parent_rank").alias("parent_rank"),
+            F.col("_o.link_pos").alias("link_pos"),
+            F.col("_o.child_depth").alias("child_depth"),
+            F.col("_oe.parent_rank").alias("e_parent_rank"),
+            F.col("_oe.link_pos").alias("e_link_pos"),
+            F.col("_oe.child_depth").alias("e_child_depth"),
+        )
         round_caches: List[DataFrame] = []
         # join the previous round's background sidecar checkpoint here — it
         # has been overlapping with this round's parse job up to this point
         sidecar = _resolve_df(sidecar) if sidecar is not None else None
+        # the seen flag is a LEFT join (not anti) so dup rows ride into the
+        # stats; _ntrav = 0 marks an unvisited depth-eligible harvest
         flagged = flag_seen(
             first, seen, sidecar=sidecar, cache_registry=round_caches,
             prefilter_fn=_sf.prefilter if _sf is not None else None,
         )
-        if with_processor:
-            flagged = flagged.withColumn("_vis", F.col("_dup"))
-        else:
+        # With identity admission every parent of a round sits at one depth,
+        # so the depth-eligible first occurrence is the global one or none;
+        # with the seeds enqueued too, the seen and visited sets then evolve
+        # identically and the seen flag doubles as the visited flag
+        if polite or not with_processor:
             vm = visited.select("url").withColumn("_v", F.lit(1))
-            flagged = (
-                flagged.join(vm, "url", "left")
-                .withColumn("_vis", F.coalesce(F.col("_v"), F.lit(0)))
-                .drop("_v")
-            )
+            flagged = flagged.join(vm, "url", "left")
+            unvisited = F.col("_v").isNull()
+        else:
+            unvisited = F.col("_dup") == 0
+        flagged = flagged.withColumn(
+            "_ntrav",
+            F.when(F.col("e_parent_rank").isNotNull() & unvisited, F.lit(0))
+            .otherwise(F.lit(1)),
+        ).drop("_v")
+        # parent ranks lie in [frontier_lo, discovered): monotone buckets
+        # over that span keep every shuffle partition busy in deep rounds
+        span = discovered - frontier_lo
         b = (
             flagged.withColumn("host_hash", host_hash_col(parse_host(F.col("url"))))
-            .withColumn("_bkt", _bucket_expr(F.col("parent_rank"), frontier_rows, nb))
+            .withColumn(
+                "_bkt", _bucket_expr(F.col("parent_rank") - frontier_lo, span, nb)
+            )
+            .withColumn(
+                "_bkte", _bucket_expr(F.col("e_parent_rank") - frontier_lo, span, nb)
+            )
             .withColumn(
                 "_part",
                 F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS)).cast("int"),
@@ -667,106 +771,157 @@ def run_crawl(
         # they need the per-bucket counts — so the table stores local ranks
         # and ALL rows (dup rows included, for the stats job); the global
         # offsets fold in lazily as a projection over the pinned table.
-        # Replaces the old persist(b) + groupingSets-over-the-live-chain +
-        # second write pass: no cache pressure, and the stats job below reads
-        # a column-pruned slim parquet instead of re-aggregating the chain.
+        # Deferred frontier rows ride along with null stat flags and their
+        # existing grank/pos: they seed the next round's admission and would
+        # otherwise recompute the whole admission lineage every round.
         _tm = time.monotonic()
-        w = Window.partitionBy("_bkt").orderBy("parent_rank", "link_pos").rowsBetween(
+        w_o = Window.partitionBy("_bkt").orderBy("parent_rank", "link_pos").rowsBetween(
             Window.unboundedPreceding, 0
         )
+        w_e = w_o if not polite else Window.partitionBy("_bkte").orderBy(
+            "e_parent_rank", "e_link_pos"
+        ).rowsBetween(Window.unboundedPreceding, 0)
         round_local = b.select(
             "url",
             "host_hash",
             "_bkt",
+            "_bkte",
             "_part",
             "_dup",
-            "_vis",
-            _running("_dup", w).alias("_lpos"),
-            _running("_vis", w).alias("_lrank"),
+            "_ntrav",
+            F.col("child_depth").cast("int").alias("first_depth"),
+            F.col("e_child_depth").cast("int").alias("depth"),
+            F.lit(None).cast("long").alias("grank"),
+            F.lit(None).cast("long").alias("pos"),
+            _running("_dup", w_o).alias("_lpos"),
+            _running("_ntrav", w_e).alias("_lgrank"),
         )
-        # Pin via eager localCheckpoint in BOTH paths; in the store path the
-        # durability parquet write rides a BACKGROUND thread (the round
-        # parquet is only ever read by resume/inspection, never by this
-        # crawl), so its encode+commit overlaps the stats job and the next
-        # round's parse. Joined before any manifest commit — a commit must
-        # never reference an unfinished write. (A CollectMetrics formulation
-        # of the stats was tried and reverted: its accumulator is an
-        # interpreted per-row aggregate whose expression count grows with
-        # shuffle partitions — measured SLOWER than the job it replaced at
-        # 16 cores, and anti-scaling with cluster size.)
+        if deferred is not None:
+            round_local = round_local.unionByName(
+                deferred.select(
+                    "url",
+                    F.col("depth").cast("int").alias("depth"),
+                    F.col("grank").cast("long").alias("grank"),
+                    F.col("pos").cast("long").alias("pos"),
+                ),
+                allowMissingColumns=True,
+            )
+        # Pin via eager localCheckpoint; in the store path the durability
+        # parquet write rides a BACKGROUND thread (the round parquet is only
+        # ever read by resume/inspection, never by this crawl), so its
+        # encode+commit overlaps the stats job and the next round's parse.
+        # Joined before any manifest commit — a commit must never reference
+        # an unfinished write. (A CollectMetrics formulation of the stats was
+        # tried and reverted: its accumulator is an interpreted per-row
+        # aggregate whose expression count grows with shuffle partitions —
+        # measured SLOWER than the job it replaced at 16 cores.)
         round_local = round_local.localCheckpoint(eager=True)
         if store is not None:
             pending_writes.append(
                 _AsyncDF(
-                    lambda df=round_local, d=depth: (
-                        store.write_table(df, "round", d),
+                    lambda df=round_local, r=rnd: (
+                        store.write_table(df, "round", r),
                         df,
                     )[1]
                 )
             )
-        # the round table is pinned; nothing re-reads the bloom prefilter
+        # the round table is pinned; nothing re-reads the sidecar prefilter
         # cache after this point — release it or a deep crawl accumulates
         # one cached relation per round
         for c in round_caches:
             c.unpersist()
         res.timings.append(
-            {"phase": f"r{depth}_mat", "ms": int((time.monotonic() - _tm) * 1000)}
+            {"phase": f"r{rnd}_mat", "ms": int((time.monotonic() - _tm) * 1000)}
         )
         _ts = time.monotonic()
 
-        # ---- job 2 (tiny, distributed, codegen): per-bucket / per-partition
-        # counts in one grouping-sets pass over the pinned in-memory table —
-        # a few int sums, no count_distinct (hosts_served backfills ONCE at
-        # end of crawl via _fill_lineage_hosts)
+        # ---- job 2 (tiny): all round stats in one collect over the pinned
+        # slim table (gid: {_bkt}=3, {_bkte}=5, {_part}=6, grand total=7 —
+        # the grand total also counts the deferred rows, so loop termination
+        # needs no count() action of its own). hosts_served is the distinct
+        # host count of the round's newly enqueued urls per partition.
         stats = (
-            round_local.groupingSets([["_bkt"], ["_part"]], "_bkt", "_part")
+            round_local.groupingSets(
+                [["_bkt"], ["_bkte"], ["_part"], []], "_bkt", "_bkte", "_part"
+            )
             .agg(
                 F.sum(1 - F.col("_dup")).alias("n_new"),
                 F.sum("_dup").alias("n_dup"),
-                F.sum(1 - F.col("_vis")).alias("n_trav"),
+                F.sum(1 - F.col("_ntrav")).alias("n_trav"),
+                F.count_distinct(
+                    F.when(F.col("_dup") == 0, F.col("host_hash"))
+                ).alias("hosts"),
+                F.count(F.when(F.col("_dup").isNull(), 1)).alias("n_def"),
+                F.min("grank").alias("def_lo"),
+                F.count(F.when((F.col("_dup") == 1) & (F.col("_ntrav") == 0), 1))
+                .alias("n_late"),
                 F.grouping_id().alias("_gid"),
             )
             .collect()
         )
-        bkt_rows = [r for r in stats if r["_gid"] == 1]
-        nn_bkt = {r["_bkt"]: int(r["n_new"]) for r in bkt_rows}
-        nt_bkt = {r["_bkt"]: int(r["n_trav"]) for r in bkt_rows}
-        n_new = sum(nn_bkt.values())
-        n_dup = sum(int(r["n_dup"]) for r in bkt_rows)
-        n_trav = sum(nt_bkt.values())
-        part_rows = sorted(
-            (int(r["_part"]), int(r["n_new"]))
-            for r in stats
-            if r["_gid"] == 2 and r["n_new"]
-        )
+        bkt_rows = [r for r in stats if r["_gid"] == 3 and r["_bkt"] is not None]
+        bkte_rows = [r for r in stats if r["_gid"] == 5 and r["_bkte"] is not None]
+        part_rows = [r for r in stats if r["_gid"] == 6 and r["n_new"]]
+        total = next(r for r in stats if r["_gid"] == 7)
+        n_new = sum(r["n_new"] for r in bkt_rows)
+        n_dup = sum(r["n_dup"] for r in bkt_rows)
+        n_trav = sum(r["n_trav"] for r in bkte_rows)
+        n_def = total["n_def"]
         res.timings.append(
-            {"phase": f"r{depth}_stats", "ms": int((time.monotonic() - _ts) * 1000)}
+            {"phase": f"r{rnd}_stats", "ms": int((time.monotonic() - _ts) * 1000)}
         )
 
-        # global pos/rank = local running sum + driver prefix-sum offset,
-        # a pure projection over the pinned table (no further job)
-        pos_off, _ = _offset_map_expr("_bkt", nn_bkt, queue_size)
-        trav_off, _ = _offset_map_expr("_bkt", nt_bkt, 0)
+        # global pos/grank = local running sum + driver prefix-sum offset, a
+        # pure projection over the pinned table (no further job); deferred
+        # rows keep their existing grank and pos
+        pos_off, _ = _offset_map_expr(
+            "_bkt", {r["_bkt"]: r["n_new"] for r in bkt_rows}, queue_size
+        )
+        grank_off, _ = _offset_map_expr(
+            "_bkte", {r["_bkte"]: r["n_trav"] for r in bkte_rows}, discovered
+        )
         round_tbl = (
-            round_local.filter((F.col("_dup") == 0) | (F.col("_vis") == 0))
+            round_local.filter(
+                (F.col("_dup") == 0)
+                | (F.col("_ntrav") == 0)
+                | F.col("_dup").isNull()
+            )
             .withColumn(
                 "pos",
                 F.when(
                     F.col("_dup") == 0, (F.col("_lpos") - 1 + pos_off).cast("long")
-                ),
+                ).otherwise(F.col("pos")),
             )
             .withColumn(
-                "rank",
+                "grank",
                 F.when(
-                    F.col("_vis") == 0, (F.col("_lrank") - 1 + trav_off).cast("long")
-                ),
+                    F.col("_ntrav") == 0,
+                    (F.col("_lgrank") - 1 + grank_off).cast("long"),
+                ).otherwise(F.col("grank")),
             )
-            .select("url", "host_hash", "pos", "rank")
+            .select(
+                "url", "host_hash", "pos", "grank", "first_depth", "depth",
+                "_dup", "_ntrav",
+            )
         )
 
-        new_seen = round_tbl.filter(F.col("pos").isNotNull()).select(
-            "url", "pos", "host_hash", F.lit(depth).alias("first_depth")
+        new_seen = round_tbl.filter(F.col("_dup") == 0).select(
+            "url", "pos", "host_hash", "first_depth"
         )
+        traverse_next = round_tbl.filter(F.col("grank").isNotNull()).select(
+            "url", "grank", "depth", "pos"
+        )
+        if total["n_late"]:
+            # a deferred shallow parent harvested a url first enqueued past
+            # maxDepth in an earlier round: it is traversed now, at the queue
+            # position it already holds
+            traverse_next = (
+                traverse_next.join(
+                    seen.select("url", F.col("pos").alias("_qpos")), "url", "left"
+                )
+                .withColumn("pos", F.coalesce(F.col("pos"), F.col("_qpos")))
+                .drop("_qpos")
+            )
         seen = seen.unionByName(new_seen)
         queue_size += n_new
         if _sf is not None:
@@ -777,11 +932,17 @@ def run_crawl(
             merged = _sf.maintain(sidecar, new_seen)
             sidecar = _AsyncDF(lambda m=merged: m.localCheckpoint(eager=True))
 
-        if depth < max_depth:
-            tcols = ["url", "rank", "pos"] if with_processor else ["url", "rank"]
-            traverse = round_tbl.filter(F.col("rank").isNotNull()).select(*tcols)
-            visited = visited.unionByName(traverse.select("url"))
-            frontier_rows = n_trav
+        visited = visited.unionByName(
+            round_tbl.filter(F.col("_ntrav") == 0).select("url")
+        )
+        lows = ([total["def_lo"]] if n_def else []) + ([discovered] if n_trav else [])
+        frontier_lo = min(lows, default=discovered + n_trav)
+        discovered += n_trav
+        fetched_total += frontier_rows - n_def  # this round's admitted count
+        # deferred + new children, straight from the stats collect: drives
+        # both loop termination and the next broadcast decision
+        frontier_rows = n_trav + n_def
+        traverse = traverse_next
 
         wall_ms = int((time.monotonic() - t0) * 1000)
         if not part_rows:
@@ -789,7 +950,7 @@ def run_crawl(
             # survive all-duplicate rounds (they feed the throughput metric)
             lineage.append(
                 {
-                    "round": depth,
+                    "round": rnd,
                     "partition_id": -1,
                     "hosts_served": 0,
                     "urls_fetched": 0,
@@ -798,15 +959,13 @@ def run_crawl(
                     "wall_ms": wall_ms,
                 }
             )
-        for p, n in part_rows:
+        for r in part_rows:
             lineage.append(
                 {
-                    "round": depth,
-                    "partition_id": p,
-                    # the one distinct aggregate is deferred: ONE end-of-
-                    # crawl job backfills hosts_served (_fill_lineage_hosts)
-                    "hosts_served": None,
-                    "urls_fetched": n,
+                    "round": rnd,
+                    "partition_id": r["_part"],
+                    "hosts_served": r["hosts"],
+                    "urls_fetched": r["n_new"],
                     "urls_deduped": n_dup,
                     "frontier_delta": n_new,
                     "wall_ms": wall_ms,
@@ -814,85 +973,75 @@ def run_crawl(
             )
         res.rounds_run += 1
 
-        if depth < max_depth and frontier_rows == 0:
+        if frontier_rows == 0:
             break
+        if max_pages is not None and fetched_total >= max_pages:
+            break  # fetch budget exhausted; discovery state stays committed
 
     # join the background round-table writes (both exits commit a manifest
     # that references them)
     for pw in pending_writes:
         pw.result()
 
-    if stopped_at is not None:
-        # stopCrawl(): commit the exact round boundary so resume=True picks
-        # up here — url_seen + pending frontier + visited + lineage so far,
-        # then the scalar counters in the manifest (atomic commit last)
-        res.stopped = True
-        if store is not None:
-            store.write_table(seen, "url_seen", stopped_at)
-            seen = store.read_table(spark, "url_seen", stopped_at)
-            _fill_lineage_hosts(lineage, seen)
-            store.write_table(traverse, "frontier", stopped_at)
-            store.write_table(visited.select("url"), "visited", stopped_at)
-            store.write_table(
-                spark.createDataFrame(lineage, LINEAGE_SCHEMA), "lineage_ckpt",
-                stopped_at,
-            )
-            m = store.load_manifest() or Manifest()
-            if _sf is not None and sidecar is not None:
-                # persist the sidecar so resume loads ~n_buckets filter rows
-                # instead of rebuilding from the full seen table
-                store.write_table(
-                    _resolve_df(sidecar), f"{_sf.kind}_sidecar", stopped_at
-                )
-                m.tables[f"{_sf.kind}_sidecar"] = stopped_at
-            m.committed_round = stopped_at - 1
-            m.tables["url_seen"] = stopped_at
-            m.meta["stopped_next_depth"] = stopped_at
-            m.meta["queue_size"] = queue_size
-            m.meta["frontier_rows"] = frontier_rows
-            m.meta["fetched_est"] = fetched_est
-            m.meta["has_content_rules"] = bool(config.has_content_rules) or resumed_had_rules
-            store.commit(m)
-        else:
-            _fill_lineage_hosts(lineage, seen)
-        res.queue = seen.select("url", "pos").orderBy("pos")
-        res.seen = seen
-        res.visited = visited
-        res.lineage = lineage
-        res.urls_enqueued = queue_size
-        return res
-
-    _tw = time.monotonic()
+    done = start_round + res.rounds_run
+    res.visited = visited
+    res.lineage = lineage
+    res.urls_enqueued = queue_size
     if store is not None:
-        store.write_table(seen, "url_seen", max_depth)
-        seen = store.read_table(spark, "url_seen", max_depth)
+        # url_seen v=k holds the seen set after k rounds; committed_round is
+        # the index of the last completed round
+        _tw = time.monotonic()
+        store.write_table(seen, "url_seen", done)
+        seen = store.read_table(spark, "url_seen", done)
         res.timings.append(
             {"phase": "url_seen_write", "ms": int((time.monotonic() - _tw) * 1000)}
         )
         m = store.load_manifest() or Manifest()
-        m.committed_round = max_depth
-        m.tables["url_seen"] = max_depth
-        m.meta.pop("stopped_next_depth", None)  # a completed resume clears the stop marker
+        if stopped_at is not None:
+            # stopCrawl(): commit the exact round boundary so resume=True
+            # picks up here — pending frontier + visited + host clocks +
+            # lineage so far, then the scalar counters in the manifest
+            # (atomic commit last)
+            store.write_table(traverse, "frontier", done)
+            store.write_table(visited, "visited", done)
+            if host_state is not None:
+                store.write_table(host_state, "host_state", done)
+            store.write_table(
+                spark.createDataFrame(lineage, LINEAGE_SCHEMA), "lineage_ckpt", done
+            )
+            if _sf is not None and sidecar is not None:
+                # persist the sidecar so resume loads ~n_buckets filter rows
+                # instead of rebuilding from the full seen table
+                store.write_table(_resolve_df(sidecar), f"{_sf.kind}_sidecar", done)
+                m.tables[f"{_sf.kind}_sidecar"] = done
+            m.meta.update(
+                stopped_next_depth=done,
+                frontier_rows=frontier_rows,
+                fetched_total=fetched_total,
+                discovered=discovered,
+                frontier_lo=frontier_lo,
+                has_content_rules=bool(config.has_content_rules) or resumed_had_rules,
+            )
+        else:
+            m.meta.pop("stopped_next_depth", None)  # a completed resume clears the stop marker
+        m.committed_round = done - 1
+        m.tables["url_seen"] = done
         m.meta["entry_url"] = (
             entry_url if isinstance(entry_url, str) else f"{n_seeds} seeds"
         )
         m.meta["queue_size"] = queue_size
         store.commit(m)
 
-    # ONE deferred hosts_served job per crawl (store path reads the pinned
-    # url_seen parquet, column-pruned to host_hash + first_depth)
-    _fill_lineage_hosts(lineage, seen)
     res.queue = seen.select("url", "pos").orderBy("pos")
     res.seen = seen
-    res.visited = visited
-    res.lineage = lineage
-    res.urls_enqueued = queue_size
-
+    if stopped_at is not None:
+        # a stopped crawl has no docs: the resumed run's docs pass covers the
+        # whole queue
+        res.stopped = True
+        return res
     if with_processor:
         raw_all = None
         for p in raw_parts:
-            if "_ckey" not in p.columns:  # raw table from a pre-_ckey snapshot
-                p = p.withColumn("_ckey", _content_key())
             raw_all = p if raw_all is None else raw_all.unionByName(p)
         res.docs = process_queue(
             spark,
@@ -900,10 +1049,11 @@ def run_crawl(
             pages,
             config,
             crawl_ts=crawl_ts,
+            robots=robots,
             queue_rows=queue_size,
             raw_docs=raw_all,
-            raw_rows=fetched_est,
-            materialize=_tail_materializer(spark, store, max_depth + 1),
+            raw_rows=fetched_total,
+            materialize=_tail_materializer(spark, store, done),
             timings=res.timings,
             has_content_rules=config.has_content_rules or resumed_had_rules,
         )
@@ -1338,12 +1488,8 @@ def process_queue(
             F.greatest(
                 F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
             ).alias("fetch_ms"),
-            # raw tables written by current run_crawl carry _ckey already;
-            # tables from an older snapshot (resume) fall back to computing it
-            *(["_ckey"] if "_ckey" in raw_docs.columns else []),
+            "_ckey",  # run_crawl computes it inside the round's parse job
         )
-        if "_ckey" not in rd.columns:
-            rd = rd.withColumn("_ckey", _content_key())
         ex = ex.unionByName(rd)
 
     parsed = ex.filter(~F.col("parse_error"))
@@ -1462,464 +1608,3 @@ def process_queue(
     if skipped_robots is not None:
         out = out.unionByName(_robots_docs(skipped_robots, ts).select(*cols))
     return out
-
-
-# ---------------------------------------------------------------------------
-# Politeness-windowed crawl (per-host admission + robots; north_rule core)
-# ---------------------------------------------------------------------------
-
-def run_polite_crawl(
-    spark: SparkSession,
-    pages: DataFrame,
-    entry_url,
-    config: CrawlConfig,
-    robots: Optional[DataFrame] = None,
-    store: Optional[SnapshotStore] = None,
-    with_processor: bool = True,
-    use_bloom: bool = False,
-    seen_filter: Optional[str] = None,
-    salt_threshold: Optional[int] = None,
-    n_salts: int = 16,
-    delays: Optional[DataFrame] = None,
-    max_rounds: int = 10_000,
-    crawl_ts: str = "2025-06-01 00:00:00",
-) -> CrawlResult:
-    """The frontier scheduler with per-host politeness windows and a robots
-    gate — semantics fixed by oracle.crawl_oracle_polite (the reference only
-    *designed* these: README.md:55-57,145-147).
-
-    Each round admits, per host, the first ``config.per_host_budget`` pending
-    URLs in global discovery order (row_number over host ordered by grank);
-    the rest defer unchanged. Robots-blocked URLs consume budget, produce no
-    links, and process as SKIPPED_ROBOTS docs. Hot hosts can be salted
-    (``salt_threshold``) at the documented cost of per-salt-only ordering.
-
-    Traversal candidates take the first DEPTH-ELIGIBLE harvest (child_depth
-    <= maxDepth), matching the oracle's per-event push rule even when a
-    deferred shallow parent and a max-depth parent harvest the same URL in
-    one round; the enqueue position still follows the global first harvest.
-    Both first-occurrences come out of ONE url-grouped aggregate (min over a
-    plain struct + min over a depth-masked struct).
-
-    With a ``delays`` table (host, crawl_delay_ms) the scheduler runs TIMED
-    politeness (admission.timed_admit): per-host ``next_allowed_ts`` virtual
-    clocks carry between rounds (config.politeness_window_ms per round), so a
-    crawl delay longer than one round admits one URL every ceil(d/W) rounds —
-    semantics fixed by oracle.crawl_oracle_polite(delays=...). Mutually
-    exclusive with ``salt_threshold`` (salting reorders within hosts, which
-    would make timed budgets rank-unstable).
-    """
-    from .operators.admission import (
-        admit,
-        apply_robots,
-        global_cap_admit,
-        salted_admit,
-        timed_admit,
-    )
-
-    if delays is not None and salt_threshold is not None:
-        raise ValueError("timed politeness and salted admission are exclusive")
-
-    # global politeness caps (README.md:55-57): globalQps → per-round global
-    # admission budget; maxConcurrentPerDomain → extra per-host-per-round cap
-    max_conc = config.max_concurrent_per_domain
-    global_cap = (
-        int(config.global_qps * config.politeness_window_ms / 1000)
-        if config.global_qps is not None
-        else None
-    )
-    # maxPages (README.md:50,:144): total admitted-fetch budget per job; the
-    # in-round remainder rides the same global prefix-cut as globalQps
-    max_pages = config.max_pages
-    fetched_total = 0
-    if max_pages is not None and max_pages <= 0:
-        max_rounds = 0  # zero fetch budget: seeds stay discovered, no rounds
-
-    _seed_marks: List[dict] = []
-    traverse, n_seeds = _seed_frontier(
-        spark, entry_url, ("grank", "depth"), timings=_seed_marks
-    )
-    if traverse is None:
-        return _empty_result(spark, with_processor=True)
-    res = CrawlResult(queue=None, seen=None, visited=None, docs=None)  # type: ignore[arg-type]
-    res.timings.extend(_seed_marks)
-
-    max_depth = max(0, config.max_depth)
-    budget = config.per_host_budget
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    visited = traverse.select("url")
-    seen = traverse.select(
-        "url",
-        F.col("grank").alias("pos"),
-        host_hash_col(parse_host(F.col("url"))).alias("host_hash"),
-        F.lit(0).alias("first_depth"),
-    )
-    queue_size = n_seeds
-    discovered = n_seeds
-
-    _sf = seen_filter_ops(seen_filter or "bloom") if (seen_filter or use_bloom) else None
-    sidecar = None
-    if _sf is not None:
-        sidecar = _sf.build(seen).localCheckpoint(eager=True)
-
-    extract_fn, _ = make_extract_pages(config, carry_cols=["grank", "depth"])
-    extract_out = extract_schema_with(
-        [StructField("grank", LongType()), StructField("depth", IntegerType())]
-    )
-
-    # content gate for the round parse (mirrors run_crawl): gated fetches
-    # consume their admission slot but harvest nothing; process_queue below
-    # emits their SKIPPED_* docs rows
-    from .operators.contentgate import skip_status_col
-
-    gate_skip = skip_status_col(
-        config.allowed_content_types,
-        config.max_content_bytes,
-        content_type_col="content_type" if "content_type" in pages.columns else None,
-    )
-    fetch_cols = ["url", "html"]
-    if gate_skip is not None and "content_type" in pages.columns:
-        fetch_cols.append("content_type")
-
-    lineage: List[dict] = []
-    # background round-table durability writes; joined before the manifest
-    # commit (same contract as run_crawl)
-    pending_writes: List[_AsyncDF] = []
-    frontier_rows = n_seeds
-
-    host_state = None
-    if delays is not None:
-        host_state = spark.createDataFrame(
-            [], "host string, next_allowed_ts long"
-        ).localCheckpoint(eager=True)
-
-    for rnd in range(max_rounds):
-        t0 = time.monotonic()
-        round_frontier = frontier_rows  # |traverse| before this round mutates it
-        eff_cap = global_cap
-        if max_pages is not None:
-            rem = max(0, max_pages - fetched_total)
-            eff_cap = rem if eff_cap is None else min(eff_cap, rem)
-        tr = traverse.withColumn("host", parse_host(F.col("url")))
-        if delays is not None:
-            admitted, deferred, new_state = timed_admit(
-                tr, budget, delays, host_state,
-                window_ms=config.politeness_window_ms, rnd=rnd,
-                order_cols=("grank",), host_col="host",
-                max_concurrent=max_conc, global_cap=eff_cap,
-            )
-            # tiny table (one row per host ever served); eager so the round's
-            # clock advance is pinned before the frontier mutates
-            host_state = new_state.localCheckpoint(eager=True)
-        elif salt_threshold is not None:
-            from .operators.admission import _min_cap
-
-            # max_concurrent is just another per-host cap: min it into the
-            # budget BEFORE the per-salt split (per-salt enforcement of a
-            # cross-salt host cap would defeat the salting)
-            admitted, deferred = salted_admit(
-                tr.withColumn("rank", F.col("grank")), _min_cap(budget, max_conc),
-                order_cols=("grank",), host_col="host",
-                salt_threshold=salt_threshold, n_salts=n_salts,
-            )
-            admitted = admitted.drop("rank")
-            deferred = deferred.drop("rank")
-            admitted, deferred = global_cap_admit(
-                admitted, deferred, eff_cap, order_cols=("grank",)
-            )
-        else:
-            admitted, deferred = admit(
-                tr, budget, order_cols=("grank",), host_col="host",
-                max_concurrent=max_conc,
-            )
-            admitted, deferred = global_cap_admit(
-                admitted, deferred, eff_cap, order_cols=("grank",)
-            )
-        if robots is not None:
-            allowed, _blocked = apply_robots(admitted, robots)
-        else:
-            allowed = admitted
-        allowed = allowed.drop("host")
-        deferred = deferred.drop("host")
-
-        allowed_side = _frontier_side(allowed, frontier_rows)
-        fetched = pages.select(*fetch_cols).join(allowed_side, "url", "inner")
-        if gate_skip is not None:
-            fetched = fetched.filter(gate_skip.isNull()).drop("content_type")
-        fetched = _balance_for_parse(spark, fetched, frontier_rows)
-        extracted = fetched.mapInPandas(extract_fn, extract_out)
-
-        links = extracted.select(
-            F.col("grank").alias("parent_rank"),
-            (F.col("depth") + 1).alias("child_depth"),
-            F.explode("links").alias("link"),
-        ).select(
-            "parent_rank",
-            "child_depth",
-            F.col("link.pos").alias("link_pos"),
-            F.col("link.href").alias("url"),
-        )
-        accepted = links.filter(
-            accepted_by_filters(
-                F.col("url"), config.include_url_patterns, config.exclude_url_patterns
-            )
-        )
-        # one url-grouped pass, two first-occurrences: global (enqueue pos)
-        # and depth-eligible (traversal push) — min skips the masked nulls
-        packed = accepted.groupBy("url").agg(
-            F.min(F.struct("parent_rank", "link_pos", "child_depth")).alias("_o"),
-            F.min(
-                F.when(
-                    F.col("child_depth") <= max_depth,
-                    F.struct("parent_rank", "link_pos", "child_depth"),
-                )
-            ).alias("_oe"),
-        )
-        first = packed.select(
-            "url",
-            F.col("_o.parent_rank").alias("parent_rank"),
-            F.col("_o.link_pos").alias("link_pos"),
-            F.col("_o.child_depth").alias("child_depth"),
-            F.col("_oe.parent_rank").alias("e_parent_rank"),
-            F.col("_oe.link_pos").alias("e_link_pos"),
-            F.col("_oe.child_depth").alias("e_child_depth"),
-        )
-        round_caches: List[DataFrame] = []
-        # join the previous round's background sidecar checkpoint here — it
-        # has been overlapping with this round's parse job up to this point
-        sidecar = _resolve_df(sidecar) if sidecar is not None else None
-        flagged = flag_seen(
-            first, seen, sidecar=sidecar, cache_registry=round_caches,
-            prefilter_fn=_sf.prefilter if _sf is not None else None,
-        )
-        vm = visited.select("url").withColumn("_v", F.lit(1))
-        flagged = (
-            flagged.join(vm, "url", "left")
-            .withColumn(
-                "_ntrav",
-                F.when(
-                    F.col("e_parent_rank").isNotNull() & F.col("_v").isNull(),
-                    F.lit(0),
-                ).otherwise(F.lit(1)),
-            )
-            .drop("_v")
-        )
-        b = (
-            flagged.withColumn("host_hash", host_hash_col(parse_host(F.col("url"))))
-            .withColumn("_bkt", _bucket_expr(F.col("parent_rank"), discovered, nb))
-            .withColumn(
-                "_bkte", _bucket_expr(F.col("e_parent_rank"), discovered, nb)
-            )
-            .withColumn(
-                "_part",
-                F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS)).cast("int"),
-            )
-        )
-
-        # ---- job 1 (the round's ONE heavy non-parse job): evaluate the
-        # harvest chain once, with bucket-LOCAL running sums, straight into
-        # the pinned round table. Deferred frontier rows ride along (they
-        # must be pinned too — they seed the next round's admission and would
-        # otherwise recompute the whole admission lineage every round) with
-        # null stat flags. Replaces the old persist(b) + groupingSets over
-        # the live chain + second write pass + count() — two driver barriers
-        # per round instead of four.
-        _tm = time.monotonic()
-        w_o = Window.partitionBy("_bkt").orderBy("parent_rank", "link_pos").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        w_e = Window.partitionBy("_bkte").orderBy(
-            "e_parent_rank", "e_link_pos"
-        ).rowsBetween(Window.unboundedPreceding, 0)
-        b_local = b.select(
-            "url",
-            "host_hash",
-            "_bkt",
-            "_bkte",
-            "_part",
-            "_dup",
-            "_ntrav",
-            F.col("child_depth").cast("int").alias("first_depth"),
-            F.col("e_child_depth").cast("int").alias("depth"),
-            F.lit(None).cast("long").alias("_dgrank"),
-            _running("_dup", w_o).alias("_lpos"),
-            _running("_ntrav", w_e).alias("_lgrank"),
-        )
-        deferred_local = deferred.select(
-            "url",
-            F.lit(None).cast("long").alias("host_hash"),
-            F.lit(None).cast("int").alias("_bkt"),
-            F.lit(None).cast("int").alias("_bkte"),
-            F.lit(None).cast("int").alias("_part"),
-            F.lit(None).cast("int").alias("_dup"),
-            F.lit(None).cast("int").alias("_ntrav"),
-            F.lit(None).cast("int").alias("first_depth"),
-            F.col("depth").cast("int").alias("depth"),
-            F.col("grank").cast("long").alias("_dgrank"),
-            F.lit(None).cast("long").alias("_lpos"),
-            F.lit(None).cast("long").alias("_lgrank"),
-        )
-        round_local = b_local.unionByName(deferred_local)
-        # pin in-memory; the durability parquet write rides a background
-        # thread (nothing in this crawl reads it back — resume/inspection
-        # only), joined before the manifest commit below (mirrors run_crawl)
-        round_local = round_local.localCheckpoint(eager=True)
-        if store is not None:
-            pending_writes.append(
-                _AsyncDF(
-                    lambda df=round_local, r=rnd: (
-                        store.write_table(df, "round", r),
-                        df,
-                    )[1]
-                )
-            )
-        for c in round_caches:  # release the round's bloom prefilter cache
-            c.unpersist()
-
-        # ---- job 2 (tiny): all round stats in one collect over the pinned
-        # slim table (gid: {_bkt}=3, {_bkte}=5, {_part}=6, grand total=7 —
-        # the grand total also counts the deferred rows, so loop termination
-        # no longer needs its own count() action)
-        stats = (
-            round_local.groupingSets(
-                [["_bkt"], ["_bkte"], ["_part"], []], "_bkt", "_bkte", "_part"
-            )
-            .agg(
-                F.sum(1 - F.col("_dup")).alias("n_new"),
-                F.sum("_dup").alias("n_dup"),
-                F.sum(1 - F.col("_ntrav")).alias("n_trav"),
-                F.count_distinct(
-                    F.when(F.col("_dup") == 0, F.col("host_hash"))
-                ).alias("hosts"),
-                F.count(F.when(F.col("_dup").isNull(), 1)).alias("n_def"),
-                F.grouping_id().alias("_gid"),
-            )
-            .collect()
-        )
-        bkt_rows = [r for r in stats if r["_gid"] == 3 and r["_bkt"] is not None]
-        bkte_rows = [r for r in stats if r["_gid"] == 5 and r["_bkte"] is not None]
-        part_rows = [r for r in stats if r["_gid"] == 6 and r["n_new"]]
-        n_new = sum(r["n_new"] for r in bkt_rows)
-        n_dup = sum(r["n_dup"] for r in bkt_rows)
-        n_trav = sum(r["n_trav"] for r in bkte_rows)
-        n_def = next((r["n_def"] for r in stats if r["_gid"] == 7), 0)
-
-        # global pos/grank = local running sum + driver prefix-sum offset, a
-        # pure projection over the pinned table (no further job); deferred
-        # rows keep their existing grank
-        pos_off, _ = _offset_map_expr(
-            "_bkt", {r["_bkt"]: r["n_new"] for r in bkt_rows}, queue_size
-        )
-        grank_off, _ = _offset_map_expr(
-            "_bkte", {r["_bkte"]: r["n_trav"] for r in bkte_rows}, discovered
-        )
-        round_tbl = (
-            round_local.filter(
-                (F.col("_dup") == 0)
-                | (F.col("_ntrav") == 0)
-                | F.col("_dup").isNull()
-            )
-            .withColumn(
-                "pos",
-                F.when(
-                    F.col("_dup") == 0, (F.col("_lpos") - 1 + pos_off).cast("long")
-                ),
-            )
-            .withColumn(
-                "grank",
-                F.when(
-                    F.col("_ntrav") == 0,
-                    (F.col("_lgrank") - 1 + grank_off).cast("long"),
-                ).otherwise(F.col("_dgrank")),
-            )
-            .select("url", "host_hash", "pos", "grank", "first_depth", "depth")
-        )
-
-        new_seen = round_tbl.filter(F.col("pos").isNotNull()).select(
-            "url", "pos", "host_hash", "first_depth"
-        )
-        seen = seen.unionByName(new_seen)
-        queue_size += n_new
-        if _sf is not None:
-            # delta maintenance + checkpoint on a BACKGROUND thread; the next
-            # round joins it right before flag_seen (overlaps the parse job)
-            merged = _sf.maintain(sidecar, new_seen)
-            sidecar = _AsyncDF(lambda m=merged: m.localCheckpoint(eager=True))
-
-        traverse_next = round_tbl.filter(F.col("grank").isNotNull()).select(
-            "url", "grank", "depth"
-        )
-        new_children = round_tbl.filter(
-            F.col("grank").isNotNull() & (F.col("grank") >= discovered)
-        )
-        visited = visited.unionByName(new_children.select("url"))
-        discovered += n_trav
-        # deferred + new children, straight from the stats collect: drives
-        # both loop termination and the next broadcast decision
-        n_next_total = n_trav + n_def
-        frontier_rows = n_next_total
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        if not part_rows:
-            lineage.append(
-                {
-                    "round": rnd,
-                    "partition_id": -1,
-                    "hosts_served": 0,
-                    "urls_fetched": 0,
-                    "urls_deduped": n_dup,
-                    "frontier_delta": 0,
-                    "wall_ms": wall_ms,
-                }
-            )
-        for r in part_rows:
-            lineage.append(
-                {
-                    "round": rnd,
-                    "partition_id": r["_part"],
-                    "hosts_served": r["hosts"],
-                    "urls_fetched": r["n_new"],
-                    "urls_deduped": n_dup,
-                    "frontier_delta": n_new,
-                    "wall_ms": wall_ms,
-                }
-            )
-        res.rounds_run += 1
-        fetched_total += round_frontier - n_def  # this round's admitted count
-        if n_next_total == 0:
-            break
-        if max_pages is not None and fetched_total >= max_pages:
-            break  # fetch budget exhausted; discovery state stays committed
-        traverse = traverse_next
-
-    for pw in pending_writes:  # a manifest must not reference unfinished writes
-        pw.result()
-
-    if store is not None:
-        store.write_table(seen, "url_seen", res.rounds_run)
-        seen = store.read_table(spark, "url_seen", res.rounds_run)
-        m = store.load_manifest() or Manifest()
-        m.committed_round = res.rounds_run
-        m.tables["url_seen"] = res.rounds_run
-        m.meta["entry_url"] = (
-            entry_url if isinstance(entry_url, str) else f"{n_seeds} seeds"
-        )
-        m.meta["queue_size"] = queue_size
-        store.commit(m)
-
-    res.queue = seen.select("url", "pos").orderBy("pos")
-    res.seen = seen
-    res.visited = visited
-    res.lineage = lineage
-    res.urls_enqueued = queue_size
-    if with_processor:
-        res.docs = process_queue(
-            spark, seen, pages, config, crawl_ts=crawl_ts, robots=robots,
-            queue_rows=queue_size,
-            materialize=_tail_materializer(spark, store, res.rounds_run + 1)
-            if store is not None
-            else None,
-            timings=res.timings,
-        )
-    return res
