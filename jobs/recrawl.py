@@ -26,7 +26,7 @@ Each invocation:
    cuckoo.cuckoo_sidecar_delete — the resumed crawl then re-admits exactly
    the due urls. A bloom sidecar cannot delete; if one is present it is
    dropped from the manifest so the resume falls back to the O(|seen|)
-   rebuild (the honest cost of choosing bloom).
+   rebuild (the honest cost of choosing bloom), and a RuntimeWarning says so.
 
 State tables (SnapshotStore versions, manifest-committed atomically):
 ``recrawl_state`` (url, hash) and ``recrawl_history`` (url, fetch_ts,
@@ -45,6 +45,7 @@ import json
 import os
 import sys
 import time
+import warnings
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -124,7 +125,8 @@ def run(spark, pages_path: str, state_dir: str, now: str,
         sv = m.tables["url_seen"]
         seen = store.read_table(spark, "url_seen", sv)
         kept = seen.join(due, "url", "left_anti")
-        evicted = seen.count() - kept.count()
+        n_kept = kept.count()
+        evicted = seen.count() - n_kept
         store.write_table(kept, "url_seen", sv + 1)
         m.tables["url_seen"] = sv + 1
         if "cuckoo_sidecar" in m.tables:
@@ -146,6 +148,14 @@ def run(spark, pages_path: str, state_dir: str, now: str,
             # now-smaller url_seen (correct, at rebuild cost)
             del m.tables["bloom_sidecar"]
             sidecar_action = "bloom_dropped_for_rebuild"
+            warnings.warn(
+                "--evict dropped the crawl's bloom sidecar (a bloom filter "
+                "cannot delete): the next resume rebuilds it from all "
+                f"{n_kept} url_seen rows, an O(|seen|) pass before its first "
+                "round. Crawl with --seen-filter cuckoo to evict in place.",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     store.commit(m)
 
     return {

@@ -548,3 +548,35 @@ def test_resume_after_evict_readmits_due_urls(spark, tmp_path):
     for u, d in readmitted.items():
         if d == 2:
             assert r1[u] == 0
+
+
+@pytest.mark.slow
+def test_evict_over_bloom_sidecar_warns_of_rebuild(spark, tmp_path):
+    """VERDICT r5 #6: a bloom filter cannot delete, so --evict over a
+    bloom-sidecar crawl drops the sidecar and the next resume pays an
+    O(|seen|) rebuild — the job must say so, not only tag its result."""
+    from jobs.recrawl import run as recrawl_run
+    from webcrawler_spark.config import CrawlConfig
+    from webcrawler_spark.corpus import generate_corpus
+    from webcrawler_spark.rounds import run_crawl
+    from webcrawler_spark.storage import SnapshotStore
+
+    corpus = generate_corpus(seed=7, n_hosts=6, n_pages=80)
+    pages = spark.createDataFrame(corpus.rows())
+    state = str(tmp_path / "state")
+    stops = iter([False, True])  # round 0 runs, stop persists the sidecar
+    res = run_crawl(
+        spark, pages, corpus.seeds[0], CrawlConfig(max_depth=1),
+        store=SnapshotStore(state), seen_filter="bloom",
+        stop=lambda: next(stops), with_processor=False,
+    )
+    assert res.stopped
+    assert "bloom_sidecar" in SnapshotStore(state).load_manifest().tables
+
+    snap = str(tmp_path / "snap")
+    pages.write.parquet(snap)
+    with pytest.warns(RuntimeWarning, match=r"O\(\|seen\|\)"):
+        s = recrawl_run(spark, snap, state, now="2025-06-01 00:00:00", evict=True)
+    assert s["sidecar"] == "bloom_dropped_for_rebuild"
+    assert s["evicted_from_seen"] > 0
+    assert "bloom_sidecar" not in SnapshotStore(state).load_manifest().tables

@@ -64,6 +64,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from .config import CrawlConfig
@@ -118,13 +119,11 @@ BROADCAST_MAX_BYTES = int(
 
 # Frontiers at or under this many rows are round-robin repartitioned before
 # the Python parse stage; larger ones run on the scan-partition layout.
-PARSE_REBALANCE_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_PARSE_REBALANCE_MAX_ROWS", "100000")
-)
+PARSE_REBALANCE_MAX_ROWS = 100_000
 # Partitions for the rebalance shuffle, as a multiple of defaultParallelism:
 # finer tasks shorten the stage's straggler tail (a wave is 1/mult of the
 # stage; one slow core costs 1/(mult*cores), not 1/cores).
-PARSE_REBALANCE_MULT = int(os.environ.get("SPARK_GRAFT_PARSE_REBALANCE_MULT", "2"))
+PARSE_REBALANCE_MULT = 2
 
 N_LINEAGE_PARTS = 32
 
@@ -153,6 +152,29 @@ def _balance_for_parse(
             PARSE_REBALANCE_MULT * spark.sparkContext.defaultParallelism
         )
     return fetched
+
+
+# P2 fetch-fidelity columns a parsed page carries next to its html
+# (WebPageProcessor's status code, fetch duration, language, capture time)
+_FETCH_FIELDS = [
+    StructField("lang", StringType()),
+    StructField("warc_ts", TimestampType()),
+    StructField("http_status", IntegerType()),
+    StructField("fetch_ms", LongType()),
+]
+_FETCH_DEFAULTS = {"http_status": 200, "fetch_ms": 0}
+
+
+def _with_fetch_defaults(df: DataFrame) -> DataFrame:
+    """Add each fetch-fidelity column the pages table lacks: http 200, 0 ms,
+    unknown language and capture time."""
+    for f in _FETCH_FIELDS:
+        if f.name not in df.columns:
+            df = df.withColumn(
+                f.name, F.lit(_FETCH_DEFAULTS.get(f.name)).cast(f.dataType)
+            )
+    return df
+
 
 # Seed DataFrames at or under this many rows are collected to the driver and
 # take the (much cheaper) list path; see _seed_frontier.
@@ -502,9 +524,10 @@ def run_crawl(
     # content): in processor mode the round's link-harvest parse also carries
     # the docs payload (title/segments/links from the same kernel call) plus
     # the P2 fidelity columns, and each round's raw extraction is persisted.
-    # The final docs pass then re-parses only the queue tail that no round
-    # ever traversed (children harvested at maxDepth, CrawlerService.java:127-131,
-    # and URLs admission never reached) instead of the whole queue.
+    # The one docs pass (process_queue) then parses only the queue tail that
+    # no round ever traversed (children harvested at maxDepth,
+    # CrawlerService.java:127-131, and URLs admission never reached) and
+    # emits every doc row from that tail unioned with these round captures.
     carry_fields = [
         StructField("grank", LongType()),
         StructField("depth", IntegerType()),
@@ -513,25 +536,9 @@ def run_crawl(
     pages_src = pages
     fetch_cols = ["url", "html"]
     if with_processor:
-        from pyspark.sql.types import TimestampType
-
-        if "http_status" not in pages_src.columns:
-            pages_src = pages_src.withColumn("http_status", F.lit(200))
-        if "fetch_ms" not in pages_src.columns:
-            pages_src = pages_src.withColumn("fetch_ms", F.lit(0).cast("long"))
-        if "lang" not in pages_src.columns:
-            pages_src = pages_src.withColumn("lang", F.lit(None).cast("string"))
-        if "warc_ts" not in pages_src.columns:
-            pages_src = pages_src.withColumn(
-                "warc_ts", F.lit(None).cast("timestamp")
-            )
-        carry_fields += [
-            StructField("lang", StringType()),
-            StructField("warc_ts", TimestampType()),
-            StructField("http_status", IntegerType()),
-            StructField("fetch_ms", LongType()),
-        ]
-        fetch_cols += ["lang", "warc_ts", "http_status", "fetch_ms"]
+        pages_src = _with_fetch_defaults(pages_src)
+        carry_fields += _FETCH_FIELDS
+        fetch_cols += [f.name for f in _FETCH_FIELDS]
     # content gate for the traversal parse: a disallowed-type / oversize
     # fetch consumes its admission slot but never enters the kernel, so it
     # harvests no links; the final docs pass emits its SKIPPED_* status
@@ -1172,149 +1179,6 @@ def _gate_docs(skipped: DataFrame, ts) -> DataFrame:
     )
 
 
-def _fused_docs(
-    spark: SparkSession,
-    q: DataFrame,
-    pages: DataFrame,
-    config: CrawlConfig,
-    ts,
-    queue_rows: Optional[int],
-    raw_docs: Optional[DataFrame],
-) -> DataFrame:
-    """Single-pass docs assembly for crawls with no content rules (DUPLICATE
-    pass statically empty — see process_queue). One job end-to-end: the never-
-    traversed queue tail left-joins pages ONCE (broadcast inner + slim url
-    anti-join under the byte gate, a true left join above it), fetch-missing
-    rows ride through the extraction kernel as null-html rows carrying a
-    ``fetchok`` flag, and a single conditional projection emits OK /
-    ERROR_PARSE / ERROR_FETCH rows. Compared to the pinned shape this removes
-    a full tail-payload parquet write + re-read (IO that is flat in core
-    count) and the double evaluation of the fetch join that the old
-    fetched/missing split caused in one union job."""
-    if queue_rows is not None and queue_rows * FRONTIER_ROW_BYTES <= BROADCAST_MAX_BYTES:
-        fetched = pages.join(F.broadcast(q), "url", "inner")
-        # the anti side reads the pages url column only — no html decode
-        missing = q.join(pages.select("url"), "url", "left_anti").withColumn(
-            "html", F.lit(None).cast("binary")
-        )
-        src = fetched.unionByName(missing, allowMissingColumns=True)
-    else:
-        src = q.join(pages, "url", "left")
-
-    if "http_status" not in src.columns:
-        src = src.withColumn("http_status", F.lit(200))
-    if "fetch_ms" not in src.columns:
-        src = src.withColumn("fetch_ms", F.lit(0).cast("long"))
-    if "lang" not in src.columns:
-        src = src.withColumn("lang", F.lit(None).cast("string"))
-    if "warc_ts" not in src.columns:
-        src = src.withColumn("warc_ts", F.lit(None).cast("timestamp"))
-
-    # content gate (README.md:60,212): disallowed-type / oversize fetches
-    # exit to SKIPPED_* rows HERE — below the scan, above the Python parse
-    # stage — so the kernel only ever decodes admitted bytes. Default-off
-    # (both knobs None) adds nothing to the plan.
-    from .operators.contentgate import split_gated
-
-    src, gate_skipped = split_gated(
-        src, config.allowed_content_types, config.max_content_bytes
-    )
-
-    extract_fn, _ = make_extract_pages(
-        config,
-        carry_cols=["pos", "lang", "warc_ts", "http_status", "fetch_ms", "fetchok"],
-    )
-    from pyspark.sql.types import TimestampType
-
-    out_schema = extract_schema_with(
-        [
-            StructField("pos", LongType()),
-            StructField("lang", StringType()),
-            StructField("warc_ts", TimestampType()),
-            StructField("http_status", IntegerType()),
-            StructField("fetch_ms", LongType()),
-            StructField("fetchok", BooleanType()),
-        ]
-    )
-    ex = _balance_for_parse(
-        spark,
-        src.select(
-            "url", "html", "pos", "lang", "warc_ts",
-            F.col("http_status").cast("int").alias("http_status"),
-            # P8 (WebPageProcessor.java:238-240) duration clamp; greatest
-            # skips nulls so fetch-missing rows land at 0
-            F.greatest(F.lit(0).cast("long"), F.col("fetch_ms").cast("long")).alias(
-                "fetch_ms"
-            ),
-            F.col("html").isNotNull().alias("fetchok"),
-        ),
-        queue_rows,
-    ).mapInPandas(extract_fn, out_schema)
-    excols = [
-        "url", "title", "segments", "links", "parse_error",
-        "pos", "lang", "warc_ts", "http_status", "fetchok", "fetch_ms",
-    ]
-    ex = ex.select(*excols[:-1], "fetch_ms")
-    if raw_docs is not None:
-        # rows already parsed during the crawl rounds: pinned raw tables,
-        # all fetched by construction (the rounds join pages inner)
-        rd = raw_docs.select(
-            *excols[:-2],
-            F.lit(True).alias("fetchok"),
-            F.greatest(
-                F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
-            ).alias("fetch_ms"),
-        )
-        ex = ex.unionByName(rd)
-
-    is_fetch_err = ~F.col("fetchok")
-    is_parse_err = F.col("fetchok") & F.col("parse_error")
-    is_ok = F.col("fetchok") & ~F.col("parse_error")
-    null_segs = F.lit(None).cast("array<string>")
-    out = ex.select(
-        F.when(is_ok, doc_id_col(F.col("url"))).alias("id"),
-        F.col("url"),
-        parse_host(F.col("url")).alias("domain"),
-        ts.alias("crawl_ts"),
-        F.when(is_fetch_err, F.lit("ERROR_FETCH"))
-        .when(is_parse_err, F.lit("ERROR_PARSE"))
-        .otherwise(F.lit("OK"))
-        .alias("status"),
-        # ERROR_FETCH never got a response: http_status stays null even when
-        # the pages table carries a default column
-        F.when(~is_fetch_err, F.col("http_status")).alias("http_status"),
-        F.when(is_fetch_err, F.lit(0).cast("long"))
-        .otherwise(F.col("fetch_ms"))
-        .alias("fetch_duration_ms"),
-        # the reference's crawlDepth = maxDepth quirk on parse errors
-        # (WebPageProcessor.java:224); null otherwise
-        F.when(is_parse_err, F.lit(config.max_depth)).cast("int").alias("crawl_depth"),
-        F.when(is_ok, F.col("title")).alias("title"),
-        F.lit(None).cast("string").alias("description"),
-        F.when(is_ok, F.col("segments")).alias("contents"),
-        F.when(is_ok, content_length_col(F.col("segments")))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("content_length"),
-        F.when(is_fetch_err, F.lit(None).cast("string"))
-        .otherwise(F.lit("text/html"))
-        .alias("content_type"),
-        F.when(is_ok, F.col("lang")).alias("language"),
-        F.when(is_ok, F.transform(F.col("links"), lambda l: l["href"])).alias(
-            "out_links"
-        ),
-        F.when(
-            is_ok, content_hash_segments(F.col("url"), F.col("segments"))
-        )
-        .otherwise(content_hash_segments(F.col("url"), null_segs))
-        .alias("hash"),
-        F.col("pos"),
-    )
-    if gate_skipped is not None:
-        out = out.unionByName(_gate_docs(gate_skipped, ts))
-    return out
-
-
 def process_queue(
     spark: SparkSession,
     queue: DataFrame,
@@ -1338,43 +1202,45 @@ def process_queue(
     ERROR_PARSE row carrying http_status/content_type and the reference's
     ``crawlDepth = maxDepth`` quirk (:216-227, :224). With a ``robots`` table,
     disallowed URLs become SKIPPED_ROBOTS rows (CrawlStatus.java:10-11) and
-    are never fetched/parsed.
+    are never fetched/parsed; content-gated fetches become SKIPPED_* rows and
+    never reach the kernel.
 
-    Content-hash dedup (CrawlStatus.DUPLICATE, model/CrawlStatus.java:19-20;
-    README.md:156 "skip if content hash unchanged"): OK docs with identical
-    NON-EMPTY extracted contents are marked DUPLICATE except the first by
-    queue position — one uniform hash-partitioned window, skew-free keys.
+    One assembly builds every doc row, like processUrl. Queue urls already
+    parsed by run_crawl's rounds (``raw_docs``) are reused as they are; the
+    rest, the tail, left-joins pages once (broadcast inner + slim url
+    anti-join under the byte gate, a true left join above it) and runs
+    through the extraction kernel, fetch-missing rows as null-html rows
+    carrying a ``fetchok`` flag. The tail unioned with ``raw_docs`` feeds one
+    conditional projection that decides every status.
 
     Per-page fetch fidelity (P2): when the pages table carries
     ``http_status``/``fetch_ms`` columns they flow into the docs (Jsoup
     ignoreHttpErrors(true): non-200 pages still parse as OK); absent columns
     default to 200/0.
 
-    ``materialize`` (df -> pinned df, e.g. a SnapshotStore write+read) makes
-    the pass EAGER and switches the DUPLICATE computation from a full-payload
-    window to the scale shape: the tail parse is materialized once, a slim
-    (url, pos, content-key) job finds the duplicate LOSERS, and the losers
-    (typically a small fraction of the queue) broadcast-join back onto the
-    payload — the multi-KB contents/links columns never enter a shuffle.
-    Without it the pass stays lazy (tests, driver-compared queries) and uses
-    the single-pass window, which is semantically identical.
+    Content-hash dedup (CrawlStatus.DUPLICATE, model/CrawlStatus.java:19-20;
+    README.md:156 "skip if content hash unchanged"): OK docs with identical
+    NON-EMPTY extracted contents are marked DUPLICATE except the first by
+    queue position. This is the one step content rules add: a slim
+    (url, pos, content-key) pass finds the duplicate LOSERS, which left-join
+    back onto the rows by url — the multi-KB contents/links columns never
+    enter a shuffle. ``has_content_rules`` false (resuming callers pass the
+    current config OR the snapshot's recorded flag) means every doc's
+    contents are empty by reference semantics, so the step is left out.
 
-    With NO content rules anywhere (``has_content_rules`` false — the
-    rules-less frontier-refresh shape, the common 10^10-scale crawl), every
-    doc's contents are empty by reference semantics so the DUPLICATE pass is
-    statically empty; the whole assembly collapses to the fused single-pass
-    plan in ``_fused_docs`` and ``materialize`` is ignored (callers resuming
-    from a snapshot pass has_content_rules = current config OR the snapshot's
-    recorded flag, so raw tables written under a rules-bearing config never
-    take the fused path).
+    ``materialize`` (df -> pinned df, e.g. a SnapshotStore write+read) makes
+    the DUPLICATE step eager: the tail parse is pinned once (both the losers
+    pass and the payload read it, and a page is never parsed twice), the
+    losers are checkpointed and counted, and broadcast back onto the payload
+    while under the byte gate. Without it, or without content rules, the
+    pass stays lazy and streams into its consumer.
     """
     q = queue.select("url", "pos")
     skipped_robots = None
     if robots is not None:
         from .operators.admission import apply_robots
 
-        q, blocked = apply_robots(q, robots)
-        skipped_robots = blocked
+        q, skipped_robots = apply_robots(q, robots)
 
     if has_content_rules is None:
         has_content_rules = config.has_content_rules
@@ -1389,222 +1255,149 @@ def process_queue(
         if queue_rows is not None:
             queue_rows = max(0, queue_rows - (raw_rows or 0))
 
-    if not has_content_rules:
-        # fused single-pass docs (the rules-less frontier-refresh shape, i.e.
-        # the common 10^10-scale crawl): with the DUPLICATE pass skipped the
-        # tail parse output has exactly ONE consumer, so pinning it to a raw
-        # table would add a full payload write + re-read whose IO cost is
-        # flat in core count (measured docs E = 0.40 at 4 -> 16 cores). The
-        # tail parse instead streams straight into the docs write: one left
-        # join, missing-ness carried through the kernel as a flag, one
-        # conditional projection emitting every status row. ``materialize``
-        # is deliberately unused — resumability is unaffected because the
-        # docs pass is one idempotent job over the committed round tables.
-        out = _fused_docs(spark, q, pages, config, ts, queue_rows, raw_docs)
-        if skipped_robots is not None:
-            out = out.unionByName(_robots_docs(skipped_robots, ts))
-        return out
-
     if queue_rows is not None and queue_rows * FRONTIER_ROW_BYTES <= BROADCAST_MAX_BYTES:
-        # broadcast the queue: the pages table (html payload) streams through
-        # a broadcast hash join instead of shuffling wholesale; the missing
-        # set needs only a url-column anti-join (no html movement)
+        # the html-bearing pages table streams through a broadcast hash join
+        # instead of shuffling; the anti side reads the pages url column only
         fetched = pages.join(F.broadcast(q), "url", "inner")
-        missing = q.join(pages.select("url"), "url", "left_anti").withColumn(
-            "html", F.lit(None).cast("binary")
-        )
+        missing = q.join(pages.select("url"), "url", "left_anti")
+        src = fetched.unionByName(missing, allowMissingColumns=True)
     else:
-        joined = q.join(pages, "url", "left")
-        fetched = joined.filter(F.col("html").isNotNull())
-        missing = joined.filter(F.col("html").isNull())
+        src = q.join(pages, "url", "left")
+    src = _with_fetch_defaults(src)
 
-    # P2 fidelity columns: thread through when present, else defaults
-    if "http_status" not in fetched.columns:
-        fetched = fetched.withColumn("http_status", F.lit(200))
-    if "fetch_ms" not in fetched.columns:
-        fetched = fetched.withColumn("fetch_ms", F.lit(0).cast("long"))
-    if "lang" not in fetched.columns:
-        fetched = fetched.withColumn("lang", F.lit(None).cast("string"))
-    if "warc_ts" not in fetched.columns:
-        fetched = fetched.withColumn("warc_ts", F.lit(None).cast("timestamp"))
-
-    # content gate (README.md:60,212): skip disallowed-type / oversize rows
-    # before the Python parse stage; default-off adds nothing to the plan
+    # content gate (README.md:60,212): disallowed-type / oversize fetches
+    # exit to SKIPPED_* rows HERE — below the scan, above the Python parse
+    # stage — so the kernel only ever decodes admitted bytes. Default-off
+    # (both knobs None) adds nothing to the plan.
     from .operators.contentgate import split_gated
 
-    fetched, gate_skipped = split_gated(
-        fetched, config.allowed_content_types, config.max_content_bytes
+    src, gate_skipped = split_gated(
+        src, config.allowed_content_types, config.max_content_bytes
     )
 
-    extract_fn, _ = make_extract_pages(
-        config, carry_cols=["pos", "lang", "warc_ts", "http_status", "fetch_ms"]
-    )
-    from pyspark.sql.types import TimestampType
-
-    out_schema = extract_schema_with(
-        [
-            StructField("pos", LongType()),
-            StructField("lang", StringType()),
-            StructField("warc_ts", TimestampType()),
-            StructField("http_status", IntegerType()),
-            StructField("fetch_ms", LongType()),
-        ]
-    )
+    # P8 (WebPageProcessor.java:238-240): durationMs clamps negative
+    # wall-clock deltas (clock skew mid-fetch) to 0; greatest skips nulls so
+    # fetch-missing rows land at 0
+    fetch_ms = F.greatest(
+        F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
+    ).alias("fetch_ms")
+    carry = [
+        StructField("pos", LongType()),
+        *_FETCH_FIELDS,
+        StructField("fetchok", BooleanType()),
+    ]
+    extract_fn, _ = make_extract_pages(config, carry_cols=[f.name for f in carry])
     ex = _balance_for_parse(
         spark,
-        fetched.select(
+        src.select(
             "url", "html", "pos", "lang", "warc_ts",
             F.col("http_status").cast("int").alias("http_status"),
-            # P8 (WebPageProcessor.java:238-240): durationMs clamps negative
-            # wall-clock deltas (clock skew mid-fetch) to 0
-            F.greatest(F.lit(0).cast("long"), F.col("fetch_ms").cast("long")).alias(
-                "fetch_ms"
-            ),
+            fetch_ms,
+            F.col("html").isNotNull().alias("fetchok"),
         ),
         queue_rows,
-    ).mapInPandas(extract_fn, out_schema)
-    excols = [
+    ).mapInPandas(extract_fn, extract_schema_with(carry))
+    cols = [
         "url", "title", "segments", "links", "parse_error",
-        "pos", "lang", "warc_ts", "http_status", "fetch_ms",
+        "pos", "lang", "warc_ts", "http_status",
     ]
-    # compute the content-dedup key INSIDE the parse job so the pinned table
-    # carries it: the duplicate pass below then reads url+pos+_ckey only
-    # (parquet column pruning skips the multi-KB segments payload entirely)
-    ex = ex.select(*excols).withColumn("_ckey", _content_key())
-    if materialize is not None:
-        # pin the tail parse: the slim dup pass and the payload pass below
-        # both read it, and the page must not be parsed twice
-        _tt = time.monotonic()
-        ex = materialize(ex)
-        if timings is not None:
-            timings.append(
-                {"phase": "docs_tail_mat", "ms": int((time.monotonic() - _tt) * 1000)}
-            )
+    ex = ex.select(*cols, "fetch_ms", "fetchok")
+    if has_content_rules:
+        # the content-dedup key is computed INSIDE the parse job so a pinned
+        # tail carries it: the losers pass then reads url+pos+_ckey only
+        # (parquet column pruning skips the segments payload)
+        ex = ex.withColumn("_ckey", _content_key())
+        cols.append("_ckey")  # run_crawl computes it in each round's parse
+        if materialize is not None:
+            _tt = time.monotonic()
+            ex = materialize(ex)
+            if timings is not None:
+                timings.append(
+                    {"phase": "docs_tail_mat", "ms": int((time.monotonic() - _tt) * 1000)}
+                )
     if raw_docs is not None:
-        rd = raw_docs.select(
-            *excols[:-1],
-            # P8 clamp for the raw-captured side (the extract path above
-            # already clamps)
-            F.greatest(
-                F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
-            ).alias("fetch_ms"),
-            "_ckey",  # run_crawl computes it inside the round's parse job
+        # rows parsed during the crawl rounds: all fetched by construction
+        # (the rounds join pages inner)
+        ex = ex.unionByName(
+            raw_docs.select(*cols, fetch_ms, F.lit(True).alias("fetchok"))
         )
-        ex = ex.unionByName(rd)
 
-    parsed = ex.filter(~F.col("parse_error"))
-    w_dup = Window.partitionBy("_ckey")
-    if materialize is not None:
-        # scale shape: every input is now a pinned table CARRYING _ckey, so
-        # the duplicate LOSERS (pos > first pos of their content key) come out
-        # of a slim column-pruned pass — url+pos+_ckey only, ~100 B/row read
-        # and shuffled, never touching the multi-KB contents/links payload —
-        # and then broadcast-join back onto the payload by url (unique in the
-        # queue). Degrade path: a loser set past the broadcast ceiling
-        # shuffle-joins; that is the window plan minus its sort, so never worse.
-        _tl = time.monotonic()
+    is_fetch_err = ~F.col("fetchok")
+    is_parse_err = F.col("fetchok") & F.col("parse_error")
+    is_ok = F.col("fetchok") & ~F.col("parse_error")
+    status = F.when(is_fetch_err, F.lit("ERROR_FETCH")).when(
+        is_parse_err, F.lit("ERROR_PARSE")
+    )
+    if has_content_rules:
+        # losers: OK rows whose content key first occurs at a smaller queue
+        # pos; only keys occurring more than once meet their rows again
+        slim = ex.filter(is_ok).select("url", "pos", "_ckey")
+        repeated = (
+            slim.groupBy("_ckey")
+            .agg(F.min("pos").alias("_first_pos"), F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") > 1)
+        )
         losers = (
-            parsed.select("url", "pos", "_ckey")
-            .withColumn("_first_pos", F.min("pos").over(w_dup))
+            slim.join(repeated, "_ckey")
             .filter(F.col("pos") > F.col("_first_pos"))
-            .select("url")
-            .localCheckpoint(eager=True)
+            .select("url", F.lit(True).alias("_isdup"))
         )
-        n_losers = losers.count()
-        if timings is not None:
-            timings.append(
-                {"phase": "docs_losers", "ms": int((time.monotonic() - _tl) * 1000)}
-            )
-        keyed = parsed.join(
-            _frontier_side(losers.withColumn("_isdup", F.lit(1)), n_losers),
-            "url",
-            "left",
-        )
-        dup_status = (
-            F.when(F.col("_isdup") == 1, F.lit("DUPLICATE")).otherwise(F.lit("OK"))
-        )
-    else:
-        keyed = parsed.withColumn("_first_pos", F.min("pos").over(w_dup))
-        dup_status = (
-            F.when(F.col("pos") > F.col("_first_pos"), F.lit("DUPLICATE"))
-            .otherwise(F.lit("OK"))
-        )
-    ok_docs = (
-        keyed
-        .select(
-            doc_id_col(F.col("url")).alias("id"),
-            F.col("url"),
-            parse_host(F.col("url")).alias("domain"),
-            ts.alias("crawl_ts"),
-            dup_status.alias("status"),
-            F.col("http_status"),
-            F.col("fetch_ms").alias("fetch_duration_ms"),
-            F.lit(None).cast("int").alias("crawl_depth"),
-            F.col("title"),
-            F.lit(None).cast("string").alias("description"),
-            F.col("segments").alias("contents"),
-            content_length_col(F.col("segments")).alias("content_length"),
-            F.lit("text/html").alias("content_type"),
-            F.col("lang").alias("language"),
-            content_hash_segments(F.col("url"), F.col("segments")).alias("hash"),
-            F.col("pos"),
-            # out_links: the kernel already emits normalized, null-free hrefs
-            # in document order — a plain column transform, no explode/regroup/
-            # self-join (which would also evaluate the extraction twice)
-            F.transform(F.col("links"), lambda l: l["href"]).alias("out_links"),
-        )
-    )
+        if materialize is not None:
+            _tl = time.monotonic()
+            losers = losers.localCheckpoint(eager=True)
+            n_losers = losers.count()
+            if timings is not None:
+                timings.append(
+                    {"phase": "docs_losers", "ms": int((time.monotonic() - _tl) * 1000)}
+                )
+            # losers are typically a small fraction of the queue; past the
+            # broadcast ceiling the join shuffles
+            losers = _frontier_side(losers, n_losers)
+        # url is unique in the queue, so the left join adds no rows
+        ex = ex.join(losers, "url", "left")
+        status = status.when(F.col("_isdup"), F.lit("DUPLICATE"))
 
-    # ERROR_PARSE rows (WebPageProcessor.java:216-227): keep http_status and
-    # content_type from the fetch; crawl_depth = maxDepth is the :224 quirk
-    parse_err_docs = ex.filter(F.col("parse_error")).select(
-        F.lit(None).cast("string").alias("id"),
+    null_segs = F.lit(None).cast("array<string>")
+    out = ex.select(
+        F.when(is_ok, doc_id_col(F.col("url"))).alias("id"),
         F.col("url"),
         parse_host(F.col("url")).alias("domain"),
         ts.alias("crawl_ts"),
-        F.lit("ERROR_PARSE").alias("status"),
-        F.col("http_status"),
-        F.col("fetch_ms").alias("fetch_duration_ms"),
-        F.lit(config.max_depth).cast("int").alias("crawl_depth"),
-        F.lit(None).cast("string").alias("title"),
+        status.otherwise(F.lit("OK")).alias("status"),
+        # ERROR_FETCH never got a response: http_status stays null even when
+        # the pages table carries a default column
+        F.when(~is_fetch_err, F.col("http_status")).alias("http_status"),
+        F.when(is_fetch_err, F.lit(0).cast("long"))
+        .otherwise(F.col("fetch_ms"))
+        .alias("fetch_duration_ms"),
+        # the reference's crawlDepth = maxDepth quirk on parse errors
+        # (WebPageProcessor.java:224); null otherwise
+        F.when(is_parse_err, F.lit(config.max_depth)).cast("int").alias("crawl_depth"),
+        F.when(is_ok, F.col("title")).alias("title"),
         F.lit(None).cast("string").alias("description"),
-        F.lit(None).cast("array<string>").alias("contents"),
-        F.lit(0).cast("long").alias("content_length"),
-        F.lit("text/html").alias("content_type"),
-        F.lit(None).cast("string").alias("language"),
-        F.lit(None).cast("array<string>").alias("out_links"),
-        content_hash_segments(F.col("url"), F.lit(None).cast("array<string>")).alias("hash"),
+        F.when(is_ok, F.col("segments")).alias("contents"),
+        F.when(is_ok, content_length_col(F.col("segments")))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("content_length"),
+        F.when(is_fetch_err, F.lit(None).cast("string"))
+        .otherwise(F.lit("text/html"))
+        .alias("content_type"),
+        F.when(is_ok, F.col("lang")).alias("language"),
+        # the kernel already emits normalized, null-free hrefs in document
+        # order — a plain column transform, no explode/regroup
+        F.when(is_ok, F.transform(F.col("links"), lambda l: l["href"])).alias(
+            "out_links"
+        ),
+        F.when(
+            is_ok, content_hash_segments(F.col("url"), F.col("segments"))
+        )
+        .otherwise(content_hash_segments(F.col("url"), null_segs))
+        .alias("hash"),
         F.col("pos"),
-    )
-
-    err_docs = missing.select(
-        F.lit(None).cast("string").alias("id"),
-        F.col("url"),
-        parse_host(F.col("url")).alias("domain"),
-        ts.alias("crawl_ts"),
-        F.lit("ERROR_FETCH").alias("status"),
-        F.lit(None).cast("int").alias("http_status"),
-        F.lit(0).cast("long").alias("fetch_duration_ms"),
-        F.lit(None).cast("int").alias("crawl_depth"),
-        F.lit(None).cast("string").alias("title"),
-        F.lit(None).cast("string").alias("description"),
-        F.lit(None).cast("array<string>").alias("contents"),
-        F.lit(0).cast("long").alias("content_length"),
-        F.lit(None).cast("string").alias("content_type"),
-        F.lit(None).cast("string").alias("language"),
-        F.lit(None).cast("array<string>").alias("out_links"),
-        content_hash_segments(F.col("url"), F.lit(None).cast("array<string>")).alias("hash"),
-        F.col("pos"),
-    )
-
-    cols = [f.name for f in _docs_schema().fields]
-    out = (
-        ok_docs.select(*cols)
-        .unionByName(parse_err_docs.select(*cols))
-        .unionByName(err_docs.select(*cols))
     )
     if gate_skipped is not None:
-        out = out.unionByName(_gate_docs(gate_skipped, ts).select(*cols))
+        out = out.unionByName(_gate_docs(gate_skipped, ts))
     if skipped_robots is not None:
-        out = out.unionByName(_robots_docs(skipped_robots, ts).select(*cols))
+        out = out.unionByName(_robots_docs(skipped_robots, ts))
     return out

@@ -79,7 +79,7 @@ def docs_stream(
 ) -> DataFrame:
     """WebPageProcessor.processUrl over a *stream* of fetched pages.
 
-    Identical columns to rounds.process_queue's OK path (id, url, domain,
+    Identical columns to rounds.process_queue's OK rows (id, url, domain,
     crawl_ts, status, title, contents, content_length, hash, language): the
     extraction kernel (mapInPandas) and all derived-column built-ins are
     stateless, so Spark runs them unchanged on the unbounded relation.

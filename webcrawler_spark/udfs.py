@@ -85,7 +85,7 @@ def make_extract_pages(config: CrawlConfig, carry_cols: Optional[list] = None):
                 url = row.url
                 html = row.html
                 if html is None:
-                    # null html (fetch-missing rows riding through the fused
+                    # null html (fetch-missing rows riding through the
                     # docs pass): emit the error shape without attempting a
                     # parse — the caller distinguishes ERROR_FETCH from
                     # ERROR_PARSE via its own carried fetch flag
