@@ -158,8 +158,9 @@ def q_f1_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The sidecar is MEMOIZED per (session, dataset) and pinned with an eager
     localCheckpoint: in the engine the sidecar is a persisted table maintained
-    incrementally per round (rounds.py bloom_sidecar_merge), never rebuilt
-    from the full seen set per query — an inline lazy build would re-run an
+    incrementally per round (operators/dedup.py sidecar_maintain ORs each
+    round's delta into its buckets), never rebuilt from the full seen set
+    per query — an inline lazy build would re-run an
     O(|seen|) construction on every evaluation of the returned plan, which is
     neither the operational shape nor a meaningful thing to time."""
     from webcrawler_spark.functions import host_hash_col, parse_host

@@ -11,7 +11,7 @@ analytics and training-data-pipeline queries from __spark_entry__.py.
 
 Optional env:
     SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS     cores for local[N] (default 32)
+    SPARK_GRAFT_CPUS     cores for local[N] (default: the CPUs this process may run on)
     BENCH_QUERIES        comma-separated subset of query names
     BENCH_REPEAT         timed repetitions per query, best-of (default 1)
 """
@@ -107,13 +107,13 @@ def evaluate(df) -> None:
 
 
 def main() -> int:
+    import __spark_entry__ as entry
+    from webcrawler_spark.session import default_cpus, get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     repeat = int(os.environ.get("BENCH_REPEAT", "2"))
     only = os.environ.get("BENCH_QUERIES")
-
-    import __spark_entry__ as entry
-    from webcrawler_spark.session import get_spark
 
     spark = get_spark(app_name="bench", master=f"local[{cpus}]")
     qs = entry.queries()

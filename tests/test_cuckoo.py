@@ -4,13 +4,12 @@ the deletable half. Kernel properties + distributed build/upsert/delete/
 prefilter exactness against the plain anti-join."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from webcrawler_spark.operators.cuckoo import (
-    cuckoo_delete_hashed,
-    cuckoo_insert_hashed,
-    cuckoo_maybe_contains_hashed,
+    chain_contains_hashed,
+    chain_delete_hashed,
+    chain_insert_hashed,
     cuckoo_new,
     cuckoo_prefilter,
     cuckoo_sidecar_build,
@@ -35,43 +34,41 @@ def _hashes(n, seed):
 
 def test_kernel_no_false_negatives_and_low_fp():
     h1, h2 = _hashes(5000, 7)
-    t = cuckoo_new(1 << 11)
-    assert cuckoo_insert_hashed(t, h1, h2) == 5000
-    assert cuckoo_maybe_contains_hashed(t, h1, h2).all()
+    chain = [cuckoo_new(1 << 11)]
+    assert chain_insert_hashed(chain, h1, h2) == 5000
+    assert len(chain) == 1
+    assert chain_contains_hashed(chain, h1, h2).all()
     g1, g2 = _hashes(100_000, 8)
-    assert cuckoo_maybe_contains_hashed(t, g1, g2).mean() < 0.005
+    assert chain_contains_hashed(chain, g1, g2).mean() < 0.005
 
 
 def test_kernel_delete_exact():
     h1, h2 = _hashes(4000, 11)
-    t = cuckoo_new(1 << 11)
-    cuckoo_insert_hashed(t, h1, h2)
-    deleted = cuckoo_delete_hashed(t, h1[:2000], h2[:2000])
+    chain = [cuckoo_new(1 << 11)]
+    chain_insert_hashed(chain, h1, h2)
+    assert len(chain) == 1
+    deleted = chain_delete_hashed(chain, h1[:2000], h2[:2000])
     assert deleted.all()
     # survivors keep the no-false-negative contract
-    assert cuckoo_maybe_contains_hashed(t, h1[2000:], h2[2000:]).all()
+    assert chain_contains_hashed(chain, h1[2000:], h2[2000:]).all()
 
 
 def test_kernel_bytes_are_order_independent():
     h1, h2 = _hashes(5000, 13)
     perm = np.random.default_rng(1).permutation(5000)
-    a, b = cuckoo_new(1 << 11), cuckoo_new(1 << 11)
-    cuckoo_insert_hashed(a, h1, h2)
-    cuckoo_insert_hashed(b, h1[perm], h2[perm])
-    assert _to_bytes(a) == _to_bytes(b)
+    a, b = [cuckoo_new(1 << 11)], [cuckoo_new(1 << 11)]
+    chain_insert_hashed(a, h1, h2)
+    chain_insert_hashed(b, h1[perm], h2[perm])
+    assert len(a) == len(b) == 1
+    assert _to_bytes(a[0]) == _to_bytes(b[0])
 
 
 def test_kernel_eviction_path_at_high_load():
     h1, h2 = _hashes(int(4096 * 0.9), 3)
-    t = cuckoo_new(1 << 10)
-    assert cuckoo_insert_hashed(t, h1, h2) == len(h1)
-    assert cuckoo_maybe_contains_hashed(t, h1, h2).all()
-
-
-def test_kernel_full_raises():
-    h1, h2 = _hashes(600, 5)
-    with pytest.raises(ValueError, match="full"):
-        cuckoo_insert_hashed(cuckoo_new(1 << 7), h1, h2)  # 512 slots < 600 keys
+    chain = [cuckoo_new(1 << 10)]
+    assert chain_insert_hashed(chain, h1, h2) == len(h1)
+    assert len(chain) == 1  # 90% load fits by displacement, no growth
+    assert chain_contains_hashed(chain, h1, h2).all()
 
 
 # ---------------------------------------------------------------------------
@@ -185,20 +182,24 @@ def test_chain_bytes_order_independent():
 
 
 def test_try_insert_failure_leaves_table_unchanged():
-    from webcrawler_spark.operators.cuckoo import _to_bytes, cuckoo_insert_hashed
+    from webcrawler_spark.operators.cuckoo import _fingerprints, _i1, _try_insert
 
     h1, h2 = _hashes(480, 41)  # 93.75% of a 128-bucket table: fits
-    t = cuckoo_new(1 << 7)
-    cuckoo_insert_hashed(t, h1, h2)
-    before = _to_bytes(t)
+    chain = [cuckoo_new(1 << 7)]
+    chain_insert_hashed(chain, h1, h2)
+    assert len(chain) == 1
+    t = chain[0]
     g1, g2 = _hashes(200, 42)
-    with pytest.raises(ValueError, match="full"):
-        cuckoo_insert_hashed(t, g1, g2)
-    # the failing insert undid its displacement path: members still present
-    assert cuckoo_maybe_contains_hashed(t, h1, h2).all()
-    # and nothing about the failed key's walk is left behind beyond the
-    # keys that DID fit before the failure point
-    assert len(_to_bytes(t)) == len(before)
+    failed = 0
+    for f, i in zip(_fingerprints(g2).tolist(), _i1(g1, t.shape[0]).tolist()):
+        before = _to_bytes(t)
+        if not _try_insert(t, f, i):
+            # the failing insert undid its whole displacement path
+            assert _to_bytes(t) == before
+            failed += 1
+    assert failed  # 680 keys > 512 slots: some insert must fail
+    # members inserted before (and around) the failures are still present
+    assert chain_contains_hashed(chain, h1, h2).all()
 
 
 def test_distributed_upsert_grows_hot_bucket(spark):
@@ -251,3 +252,33 @@ def test_chain_reinsert_missing_repairs_collateral_strips():
     assert n_fixed >= 5
     # contract restored: every surviving key answers "maybe" again
     assert chain_contains_hashed(chain, kept1, kept2).all()
+
+
+def test_skewed_delete_touches_only_its_bucket(spark):
+    """Deletions confined to one of 8 buckets: the repair's kept side is
+    semi-joined to that bucket, so every other bucket's row passes through
+    byte for byte, no kept key goes false-negative, and the bucket's
+    n_keys drops by exactly the deleted count."""
+    seen = _seen(spark, 0, 3000)
+    bucket = (F.col("host_hash") % 8).cast("int")
+    hot = seen.select(bucket.alias("b")).first()["b"]
+    evict = seen.filter((bucket == hot) & (F.xxhash64("url") % 3 == 0))
+    kept = seen.join(evict.select("url"), "url", "left_anti")
+    side = cuckoo_sidecar_build(seen, n_buckets=8, m_buckets=1 << 6).localCheckpoint()
+    side2 = cuckoo_sidecar_delete(side, evict, n_buckets=8, kept=kept)
+
+    def rows(df):
+        return {r.bucket: (r.m_buckets, tuple(bytes(t) for t in r.tables), r.n_keys)
+                for r in df.collect()}
+
+    before, after = rows(side), rows(side2)
+    assert set(before) == set(after) and len(before) > 1
+    assert len(before[hot][1]) > 1  # the touched bucket has really chained
+    for b in before:
+        if b != hot:
+            assert after[b] == before[b]
+    n_evict = evict.count()
+    assert n_evict > 0
+    assert before[hot][2] - after[hot][2] == n_evict
+    new, _ = cuckoo_prefilter(kept.select("url", "host_hash"), side2, n_buckets=8)
+    assert new.count() == 0

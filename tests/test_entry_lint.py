@@ -20,6 +20,27 @@ def test_lint_catches_array_map_struct_outputs(spark):
     assert set(nested) == {"arr", "mp", "st"}
 
 
+def test_lint_catches_every_arrow_list_kind():
+    """Pure pyarrow: the list variants Spark never emits but an Arrow-native
+    query could (large_list, fixed_size_list) are nested too."""
+    import pyarrow as pa
+
+    schema = pa.schema(
+        [
+            ("id", pa.int64()),
+            ("s", pa.large_string()),
+            ("l", pa.list_(pa.int64())),
+            ("ll", pa.large_list(pa.string())),
+            ("fl", pa.list_(pa.float64(), 3)),
+            ("m", pa.map_(pa.string(), pa.int32())),
+            ("u", pa.dense_union([pa.field("a", pa.int8())])),
+        ]
+    )
+    nested = nested_output_columns(schema)
+    assert set(nested) == {"l", "ll", "fl", "m", "u"}
+    assert nested["ll"] == "list<string>" and nested["fl"] == "list<float>"
+
+
 def test_lint_passes_serialized_outputs(spark):
     df = spark.range(3).select(
         F.col("id"),

@@ -68,6 +68,22 @@ def test_available_now_drain_equals_batch(spark, pages_dir, tmp_path):
     # extraction really ran: the min-80-char <p> rule yields nonzero content
     assert got.agg(F.sum("content_length")).collect()[0][0] > 0
 
+    # kernel-refused pages are ERROR_PARSE rows shaped as in the batch docs
+    # pass (null id/title/contents/language, content_length 0, url-only hash)
+    from webcrawler_spark.rounds import process_queue
+
+    cols = ["url", "id", "title", "contents", "content_length", "language", "hash"]
+
+    def parse_errors(df):
+        return {
+            tuple(r[c] for c in cols)
+            for r in df.filter(F.col("status") == "ERROR_PARSE").select(*cols).collect()
+        }
+
+    queue = batch_pages.select("url", F.monotonically_increasing_id().alias("pos"))
+    want = parse_errors(process_queue(spark, queue, batch_pages, cfg))
+    assert want and parse_errors(got) == want
+
 
 def test_available_now_is_incremental(spark, pages_dir, tmp_path):
     """Re-running on an unchanged input drains nothing new (checkpoint offsets

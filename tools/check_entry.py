@@ -96,13 +96,12 @@ def nested_output_columns(schema) -> dict:
     canonicalizer pandas-sorts output cells and cannot hash array/map/struct
     values — any such column burns a correctness-window slot with a harness
     TypeError. Returns {column: kind} for every offending column of an
-    Arrow schema; queries must serialize (array_join / to_json) instead."""
-    return {
-        f.name: arrow_kind(f.type)
-        for f in schema
-        if arrow_kind(f.type).startswith(("list", "struct"))
-        or str(f.type).startswith("map")
-    }
+    Arrow schema — every nested Arrow type (list, large_list,
+    fixed_size_list, struct, map, union); queries must serialize
+    (array_join / to_json) instead."""
+    import pyarrow as pa
+
+    return {f.name: arrow_kind(f.type) for f in schema if pa.types.is_nested(f.type)}
 
 
 def table_cells(tbl):

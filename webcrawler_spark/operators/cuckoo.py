@@ -1,8 +1,12 @@
-"""URL-seen dedup sidecar #2: partitioned **cuckoo filter** (north_star:
-"partitioned Bloom/cuckoo filter maintained per host-hash partition via
-mapInPandas").
+"""The cuckoo-filter kernels of the URL-seen sidecar (north_star:
+"partitioned Bloom/cuckoo filter maintained per host-hash partition").
 
-Why a second filter when the Bloom sidecar (operators/dedup.py) exists: a
+The sidecar operator — hash projection, build, per-bucket maintenance fold,
+prefilter and dedup gate — lives in operators/dedup.py and is shared with
+the Bloom filter; this module supplies the per-bucket numpy kernels it runs
+(``CUCKOO``) and the public ``cuckoo_*`` forms over it.
+
+Why a second filter when the Bloom filter exists: a
 cuckoo filter (Fan et al., "Cuckoo Filter: Practically Better Than Bloom",
 CoNEXT 2014 — public paper) supports **deletion**, which a crawl actually
 needs: a URL evicted from the seen set (recrawl scheduling decides a GONE /
@@ -14,9 +18,9 @@ from ONE table lookup of at most two 4-slot buckets (cache-friendly) versus
 the Bloom's k=7 scattered bit probes, at a comparable false-positive rate
 (16-bit fingerprints, 4-slot buckets: fpr ≈ 2·b/2^16 ≈ 0.012%).
 
-Same JVM/numpy hash split as the Bloom sidecar (input_hint: "no per-row
-Python"): the two base hashes are ``xxhash64`` COLUMNS; the fingerprint and
-both candidate buckets derive from them vectorized inside the UDF:
+The operator hands the kernels the two ``xxhash64`` base-hash COLUMNS
+(input_hint: "no per-row Python"); the fingerprint and both candidate
+buckets derive from them vectorized inside the UDF:
 
     f  = low 16 bits of h2, 0 mapped to 1      (0 = empty slot sentinel)
     i1 = h1 mod m
@@ -43,32 +47,32 @@ deterministic (sorted insert + undo-on-fail displacement), so chain bytes
 remain a pure function of the key set.
 
 Deletion contract (standard cuckoo-filter caveat, stated honestly): only
-delete keys that were inserted. Deleting removes ONE copy of the
-fingerprint from the key's buckets; deleting a never-inserted key can strip
-a colliding key's fingerprint (a false negative). The crawl only deletes
-from ``url_seen`` rows, which satisfies the contract by construction —
-and for a SINGLE table that is sufficient: n colliding inserted keys store
+delete keys that were inserted. Deleting removes ONE copy of the fingerprint
+from the key's buckets; deleting a never-inserted key can strip a colliding
+key's fingerprint (a false negative). The crawl only deletes from
+``url_seen`` rows, which satisfies the contract by construction — and for a
+chain of ONE sub-filter that is sufficient: n colliding inserted keys store
 n copies, so deleting d of them leaves n-d ≥ the survivors' count. A CHAIN
 weakens this (ADVICE r4): sub-filters have different bucket masks, so the
 oldest→newest probe can remove a collider's copy from an old sub-filter
 while the deleted key's own copy sits in a newer one — the collider's copy
 was its only one VISIBLE AT ITS OWN PROBE POSITIONS, so it goes false
 negative. Probability per delete ≈ the fingerprint-collision rate
-(2·SLOTS/2^16 ≈ 0.012% per resident colliding key, and only when the
-bucket has actually chained). The exact repair exists because the caller
-holds the exact surviving key set: ``cuckoo_sidecar_delete(..., kept=...)``
-re-probes the kept keys of every touched bucket after the deletes and
-re-inserts any stripped fingerprint — restoring no-false-negatives exactly
-(a re-inserted copy can at worst re-create a FALSE POSITIVE for the
-deleted key, which the engine's maybe→exact-anti-join path absorbs).
+(2·SLOTS/2^16 ≈ 0.012% per resident colliding key, and only when the bucket
+has actually chained). The exact repair exists because the caller holds the
+exact surviving key set: ``cuckoo_sidecar_delete(..., kept=...)`` re-probes
+the kept keys of every touched bucket after the deletes and re-inserts any
+stripped fingerprint — restoring no-false-negatives exactly (a re-inserted
+copy can at worst re-create a FALSE POSITIVE for the deleted key, which the
+engine's maybe→exact-anti-join path absorbs).
 jobs/recrawl.py passes ``kept`` on eviction.
 
-Scale shape is identical to the Bloom sidecar: state lives per host_hash
-bucket (co-located with the frontier partitioning), built and maintained by
-``mapInPandas`` / cogrouped ``applyInPandas`` over int64 hash columns —
-URL strings never cross into Python, the seen table never reshuffles for
-the fast path, and per-round maintenance is O(|delta| + touched buckets),
-never a rebuild.
+Scale shape is the shared operator's: state lives per host_hash bucket
+(co-located with the frontier partitioning), built and maintained over
+int64 hash columns — URL strings never cross into Python, the seen table
+never reshuffles for the fast path, and per-round maintenance is
+O(|delta| + touched buckets), never a rebuild. The kernels keep the whole
+chain in one sidecar row's ``tables`` cell (one binary per sub-filter).
 
 Sizing at a 10^10-URL frontier: insertion is a per-key Python loop
 (~1.3e5 keys/s/core measured — the price of displacement; probes are
@@ -82,12 +86,11 @@ one you can delete from.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from functools import partial
+from typing import Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -97,7 +100,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .dedup import anti_join_new, bloom_hash_cols, bucket_col
+from .dedup import (
+    SidecarKernels,
+    sidecar_build,
+    sidecar_dedup,
+    sidecar_maintain,
+    sidecar_prefilter,
+)
 
 SLOTS = 4                 # entries per bucket (b=4: the paper's sweet spot)
 MAX_KICKS = 500           # displacement bound before "filter full"
@@ -169,27 +178,6 @@ def _try_insert(table: np.ndarray, f: int, i1: int) -> bool:
     for b, s, old in reversed(path):
         table[b][s] = old
     return False
-
-
-def cuckoo_insert_hashed(table: np.ndarray, h1: np.ndarray, h2: np.ndarray) -> int:
-    """Insert the (deduped, sorted) key set into ``table`` in place; returns
-    the number of fingerprints stored. Raises when the displacement bound is
-    hit — single-table form; the engine's distributed sidecar uses the
-    CHAIN form below, which grows instead of failing."""
-    m = table.shape[0]
-    u1, u2 = _dedup_sort(h1, h2)
-    fs = _fingerprints(u2)
-    i1s = _i1(u1, m)
-    stored = 0
-    for f, i in zip(fs.tolist(), i1s.tolist()):
-        if not _try_insert(table, f, i):
-            raise ValueError(
-                f"cuckoo filter full after {MAX_KICKS} kicks "
-                f"(m_buckets={m}, stored={stored}); size m_buckets for the "
-                "bucket's key count"
-            )
-        stored += 1
-    return stored
 
 
 def chain_insert_hashed(tables: list, h1: np.ndarray, h2: np.ndarray) -> int:
@@ -302,30 +290,6 @@ def cuckoo_maybe_contains_hashed(
     return hit1 | hit2
 
 
-def cuckoo_delete_hashed(
-    table: np.ndarray, h1: np.ndarray, h2: np.ndarray
-) -> np.ndarray:
-    """Remove ONE stored copy of each key's fingerprint (bucket i1 first,
-    then i2), in the same sorted deterministic order as insertion. Returns
-    the per-unique-key deleted mask. In-place."""
-    m = table.shape[0]
-    mask = m - 1
-    mul = int(_FP_MUL)
-    u1, u2 = _dedup_sort(h1, h2)
-    fs = _fingerprints(u2)
-    i1s = _i1(u1, m)
-    out = np.zeros(len(fs), dtype=bool)
-    for k, (f, i) in enumerate(zip(fs.tolist(), i1s.tolist())):
-        for b in (int(i), (int(i) ^ (int(f) * mul)) & mask):
-            row = table[b]
-            hits = np.flatnonzero(row == f)
-            if hits.size:
-                row[hits[0]] = 0
-                out[k] = True
-                break
-    return out
-
-
 def _to_bytes(table: np.ndarray) -> bytes:
     return table.astype("<u2").tobytes()
 
@@ -335,18 +299,6 @@ def _from_bytes(blob: bytes) -> np.ndarray:
     return arr.reshape(len(arr) // SLOTS, SLOTS).copy()
 
 
-# ---------------------------------------------------------------------------
-# Distributed operators (mirror the Bloom sidecar's shapes)
-# ---------------------------------------------------------------------------
-
-CUCKOO_SCHEMA = StructType(
-    [
-        StructField("bucket", IntegerType()),
-        StructField("m_buckets", LongType()),
-        StructField("tables", ArrayType(BinaryType())),
-        StructField("n_keys", LongType()),
-    ]
-)
 
 
 def _chain_to_bytes(tables: list) -> list:
@@ -359,6 +311,47 @@ def _chain_from_bytes(blobs) -> list:
     return [_from_bytes(bytes(b)) for b in blobs]
 
 
+# ---------------------------------------------------------------------------
+# The sidecar operator's cuckoo kernels (operators/dedup.py runs them)
+# ---------------------------------------------------------------------------
+
+
+def _cuckoo_upsert(blobs, h1: np.ndarray, h2: np.ndarray) -> Tuple[list, int]:
+    chain = _chain_from_bytes(blobs)
+    n = chain_insert_hashed(chain, h1, h2)
+    return _chain_to_bytes(chain), n
+
+
+def _cuckoo_build(h1: np.ndarray, h2: np.ndarray, m_buckets: int) -> Tuple[list, int]:
+    return _cuckoo_upsert([_to_bytes(cuckoo_new(m_buckets))], h1, h2)
+
+
+def _cuckoo_probe(blobs, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    return chain_contains_hashed(_chain_from_bytes(blobs), h1, h2)
+
+
+def _cuckoo_delete(blobs, h1, h2, kept_h1, kept_h2) -> Tuple[list, int]:
+    """Delete, then repair the kept keys a colliding delete stripped."""
+    chain = _chain_from_bytes(blobs)
+    change = -int(chain_delete_hashed(chain, h1, h2).sum())
+    change += chain_reinsert_missing(chain, kept_h1, kept_h2)
+    return _chain_to_bytes(chain), change
+
+
+CUCKOO_SCHEMA = StructType(
+    [
+        StructField("bucket", IntegerType()),
+        StructField("m_buckets", LongType()),
+        StructField("tables", ArrayType(BinaryType())),
+        StructField("n_keys", LongType()),
+    ]
+)
+
+CUCKOO = SidecarKernels(
+    CUCKOO_SCHEMA, True, _cuckoo_build, _cuckoo_upsert, _cuckoo_probe, _cuckoo_delete
+)
+
+
 def cuckoo_sidecar_build(
     seen: DataFrame,
     n_buckets: int = 64,
@@ -366,96 +359,12 @@ def cuckoo_sidecar_build(
     url_col: str = "url",
     host_hash_col: str = "host_hash",
 ) -> DataFrame:
-    """Per-host_hash-bucket CHAINED cuckoo filters from a url_seen table
-    (or a round's delta — see :func:`cuckoo_sidecar_upsert`). ``m_buckets``
-    sizes the first sub-filter only: a bucket whose key count outgrows it
-    (hot-host Zipf skew) chains doubled sub-filters instead of failing.
-    Only (bucket, h1, h2) int64 columns cross into Python. Each partition
-    accumulates its bucket's full hash set first so the sorted-insert
-    determinism holds across arrow batch boundaries."""
-    h1, h2 = bloom_hash_cols(F.col(url_col))
-
-    def build(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict = {}
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            for bucket, grp in pdf.groupby("_bucket"):
-                acc.setdefault(int(bucket), []).append(
-                    (grp["_h1"].to_numpy(np.int64), grp["_h2"].to_numpy(np.int64))
-                )
-        if acc:
-            rows = []
-            for b, chunks in acc.items():
-                chain = [cuckoo_new(m_buckets)]
-                n = chain_insert_hashed(
-                    chain,
-                    np.concatenate([c[0] for c in chunks]),
-                    np.concatenate([c[1] for c in chunks]),
-                )
-                rows.append((b, m_buckets, _chain_to_bytes(chain), n))
-            yield pd.DataFrame(rows, columns=["bucket", "m_buckets", "tables", "n_keys"])
-
-    hashed = seen.select(
-        bucket_col(F.col(host_hash_col), n_buckets).alias("_bucket"),
-        h1.alias("_h1"),
-        h2.alias("_h2"),
-    )
-    return hashed.repartition(n_buckets, "_bucket").mapInPandas(build, CUCKOO_SCHEMA)
-
-
-def _hashed_keys(df: DataFrame, n_buckets: int, url_col: str,
-                 host_hash_col: str) -> DataFrame:
-    if host_hash_col in df.columns:
-        hh = F.col(host_hash_col)
-    else:
-        from ..functions import host_hash_col as _hh, parse_host
-
-        hh = _hh(parse_host(F.col(url_col)))
-    h1, h2 = bloom_hash_cols(F.col(url_col))
-    return df.select(
-        bucket_col(hh, n_buckets).alias("bucket"),
-        h1.alias("_h1"),
-        h2.alias("_h2"),
-    )
-
-
-def _apply_per_bucket(
-    sidecar: DataFrame, keys: DataFrame, op: str, m_buckets_default: int
-) -> DataFrame:
-    """Cogroup (sidecar row, key slice) per bucket and mutate the table —
-    the shared shape of upsert and delete. Buckets with no keys pass
-    through untouched; keys with no filter row get a fresh
-    ``m_buckets_default`` table (upsert) or are no-ops (delete)."""
-
-    cols = ["bucket", "m_buckets", "tables", "n_keys"]
-
-    def fold(key, side_pdf: pd.DataFrame, keys_pdf: pd.DataFrame) -> pd.DataFrame:
-        if keys_pdf.empty:
-            return side_pdf[cols] if not side_pdf.empty else pd.DataFrame(columns=cols)
-        bucket = int(key[0])
-        if side_pdf.empty:
-            if op == "delete":
-                return pd.DataFrame(columns=cols)
-            m, chain, n = m_buckets_default, [cuckoo_new(m_buckets_default)], 0
-        else:
-            row = side_pdf.iloc[0]
-            m = int(row["m_buckets"])
-            chain = _chain_from_bytes(row["tables"])
-            n = int(row["n_keys"])
-        h1 = keys_pdf["_h1"].to_numpy(np.int64)
-        h2 = keys_pdf["_h2"].to_numpy(np.int64)
-        if op == "upsert":
-            n += chain_insert_hashed(chain, h1, h2)
-        else:
-            n -= int(chain_delete_hashed(chain, h1, h2).sum())
-        return pd.DataFrame([(bucket, m, _chain_to_bytes(chain), n)], columns=cols)
-
-    return (
-        sidecar.groupBy("bucket")
-        .cogroup(keys.groupBy("bucket"))
-        .applyInPandas(fold, CUCKOO_SCHEMA)
-    )
+    """Per-host_hash-bucket CHAINED cuckoo filters from a url_seen table.
+    ``m_buckets`` sizes the first sub-filter only: a bucket whose key count
+    outgrows it (hot-host Zipf skew) chains doubled sub-filters instead of
+    failing. Each task gathers its bucket's full hash set first so the
+    sorted-insert determinism holds across arrow batch boundaries."""
+    return sidecar_build(CUCKOO, seen, n_buckets, m_buckets, url_col, host_hash_col)
 
 
 def cuckoo_sidecar_upsert(
@@ -472,8 +381,10 @@ def cuckoo_sidecar_upsert(
     construction); re-upserting an existing key would store a second copy
     and skew delete-once accounting. ``m_buckets`` sizes tables for buckets
     the build never saw (first keys for a new host-hash range)."""
-    keys = _hashed_keys(delta_seen, n_buckets, url_col, host_hash_col)
-    return _apply_per_bucket(sidecar, keys, "upsert", m_buckets)
+    return sidecar_maintain(
+        CUCKOO, sidecar, delta_seen, "upsert", m_buckets, n_buckets, url_col,
+        host_hash_col,
+    )
 
 
 def cuckoo_sidecar_delete(
@@ -491,124 +402,19 @@ def cuckoo_sidecar_delete(
     enables the chain-collision repair (module docstring, "Deletion
     contract"): after the deletes, every touched bucket re-probes its kept
     keys and re-inserts any fingerprint a colliding delete stripped,
-    restoring the no-false-negative contract exactly. Cost is a vectorized
-    probe over the touched buckets' kept keys only (untouched buckets never
-    enter the cogroup's kept side). Without ``kept`` the raw delete runs
-    with the documented ~0.012%-per-collision residual."""
-    keys = _hashed_keys(deletions, n_buckets, url_col, host_hash_col)
-    if kept is None:
-        return _apply_per_bucket(sidecar, keys, "delete", 0)
-
-    touched = keys.select("bucket").distinct()  # ≤ n_buckets rows
-    kept_keys = _hashed_keys(kept, n_buckets, url_col, host_hash_col).join(
-        touched, "bucket", "left_semi"
-    )
-    dels = keys.withColumn("_op", F.lit(0))
-    verify = kept_keys.withColumn("_op", F.lit(1))
-    cols = ["bucket", "m_buckets", "tables", "n_keys"]
-
-    def fold(key, side_pdf: pd.DataFrame, keys_pdf: pd.DataFrame) -> pd.DataFrame:
-        if keys_pdf.empty:
-            return side_pdf[cols] if not side_pdf.empty else pd.DataFrame(columns=cols)
-        if side_pdf.empty:
-            return pd.DataFrame(columns=cols)
-        bucket = int(key[0])
-        row = side_pdf.iloc[0]
-        m = int(row["m_buckets"])
-        chain = _chain_from_bytes(row["tables"])
-        n = int(row["n_keys"])
-        d = keys_pdf[keys_pdf["_op"] == 0]
-        k = keys_pdf[keys_pdf["_op"] == 1]
-        n -= int(
-            chain_delete_hashed(
-                chain, d["_h1"].to_numpy(np.int64), d["_h2"].to_numpy(np.int64)
-            ).sum()
-        )
-        n += chain_reinsert_missing(
-            chain, k["_h1"].to_numpy(np.int64), k["_h2"].to_numpy(np.int64)
-        )
-        return pd.DataFrame([(bucket, m, _chain_to_bytes(chain), n)], columns=cols)
-
-    return (
-        sidecar.groupBy("bucket")
-        .cogroup(dels.unionByName(verify).groupBy("bucket"))
-        .applyInPandas(fold, CUCKOO_SCHEMA)
+    restoring the no-false-negative contract exactly. The kept set is
+    semi-joined to the buckets the deletions touch before it is shuffled,
+    so the repair is never corpus-wide: its cost is a vectorized probe over
+    the touched buckets' kept keys only, and an untouched bucket's row
+    passes through byte for byte. Without ``kept`` the raw delete runs with
+    the documented ~0.012%-per-collision residual."""
+    return sidecar_maintain(
+        CUCKOO, sidecar, deletions, "delete", 0, n_buckets, url_col,
+        host_hash_col, kept=kept,
     )
 
 
-def cuckoo_prefilter(
-    candidates: DataFrame,
-    sidecar: DataFrame,
-    url_col: str = "url",
-    host_hash_col: str = "host_hash",
-    n_buckets: int = 64,
-    cache_registry: Optional[list] = None,
-) -> Tuple[DataFrame, DataFrame]:
-    """Split candidates into (definitely_new, maybe_seen) — the same
-    cogroup shape, persistence discipline, and no-false-negative contract
-    as dedup.bloom_prefilter, probing the cuckoo table instead."""
-    if host_hash_col in candidates.columns:
-        hh = F.col(host_hash_col)
-    else:
-        from ..functions import host_hash_col as _hh, parse_host
-
-        hh = _hh(parse_host(F.col(url_col)))
-    h1, h2 = bloom_hash_cols(F.col(url_col))
-    cand = (
-        candidates.withColumn("_bucket", bucket_col(hh, n_buckets))
-        .withColumn("_h1", h1)
-        .withColumn("_h2", h2)
-    )
-    side = sidecar.withColumnRenamed("bucket", "_bucket")
-
-    internal = {"_bucket", "_h1", "_h2"}
-    carry = [f.name for f in cand.schema.fields if f.name not in internal]
-    out_schema = StructType(
-        [f for f in cand.schema.fields if f.name not in internal]
-        + [StructField("_maybe", IntegerType())]
-    )
-
-    def split(key, cand_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return cand_pdf.assign(_maybe=pd.Series([], dtype="int32"))[carry + ["_maybe"]]
-        if side_pdf.empty:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
-        else:
-            chain = _chain_from_bytes(side_pdf.iloc[0]["tables"])
-            maybe = chain_contains_hashed(
-                chain,
-                cand_pdf["_h1"].to_numpy(np.int64),
-                cand_pdf["_h2"].to_numpy(np.int64),
-            )
-        out = cand_pdf[carry].copy()
-        out["_maybe"] = maybe.astype("int32")
-        return out
-
-    joined = cand.groupBy("_bucket").cogroup(side.groupBy("_bucket")).applyInPandas(
-        split, out_schema
-    )
-    joined = joined.persist()
-    if cache_registry is not None:
-        cache_registry.append(joined)
-    new = joined.filter(F.col("_maybe") == 0).drop("_maybe")
-    maybe = joined.filter(F.col("_maybe") == 1).drop("_maybe")
-    return new, maybe
-
-
-def dedup_against_seen_cuckoo(
-    candidates: DataFrame,
-    seen: DataFrame,
-    sidecar: DataFrame,
-    url_col: str = "url",
-    n_buckets: int = 64,
-    cache_registry: Optional[list] = None,
-) -> DataFrame:
-    """Exact dedup gate through the cuckoo fast path: prefilter, then the
-    exact anti-join on the maybe-residue only — semantics identical to
-    ``anti_join_new`` (the filter is a shuffle saver, never an answer)."""
-    new, maybe = cuckoo_prefilter(
-        candidates, sidecar, url_col=url_col, n_buckets=n_buckets,
-        cache_registry=cache_registry,
-    )
-    checked = anti_join_new(maybe, seen, url_col)
-    return new.unionByName(checked)
+# (candidates, sidecar, url_col, host_hash_col, n_buckets, cache_registry)
+cuckoo_prefilter = partial(sidecar_prefilter, CUCKOO)
+# (candidates, seen, sidecar, url_col, n_buckets, cache_registry)
+dedup_against_seen_cuckoo = partial(sidecar_dedup, CUCKOO)

@@ -1,4 +1,4 @@
-"""URL-seen dedup: exact anti-join + partitioned Bloom-filter sidecar.
+"""URL-seen dedup: exact anti-join + one partitioned seen-sidecar operator.
 
 The exact semantics are the reference's seen-set gate
 (crawler/InMemoryLinkQueue.java:36-43; retention contract LinkQueue.java:18-21):
@@ -6,28 +6,31 @@ a URL ever enqueued is never enqueued again. Exactness comes from a
 ``left_anti`` join against the append-only ``url_seen`` table.
 
 At a 10^10-URL frontier the anti-join's shuffle of *candidates × seen* is the
-dominant cost, so the engine keeps a **per-host_hash-partition Bloom filter
-sidecar** (north_star): candidates are pre-filtered through the bloom — a
+dominant cost, so the engine keeps a **per-host_hash-bucket approximate
+membership sidecar** (north_star): candidates are pre-filtered through it — a
 definite-no avoids shuffling the seen side at all for that URL; only the
-"maybe" residue (false-positive rate ~1%) takes the exact anti-join. Bloom
-state is maintained per partition via cogrouped applyInPandas, with **explicit
-hot-host salting**: a host whose pending count exceeds ``salt_threshold``
-spreads across ``n_salts`` subpartitions (north_rule: "skew handled
-explicitly").
+"maybe" residue takes the exact anti-join.
 
-Hashing is split JVM/numpy for scale (input_hint: "no per-row Python"):
-the two 64-bit base hashes per URL are computed as ``xxhash64`` COLUMNS
-(whole-stage codegen, the url string never crosses into Python), and the k
-probe positions derive from them inside the UDF with pure vectorized numpy
-(classic Kirsch–Mitzenmacher double hashing: pos_i = h1 + i*h2 mod m).
-The sidecar is maintained INCREMENTALLY: ``bloom_sidecar_build`` over a
-round's new_seen delta, then ``bloom_sidecar_merge`` (bitwise OR per bucket)
-into the persisted sidecar — never a rebuild over the full seen table.
+One operator serves both filter kinds: the choice of filter is a swap of
+the membership structure (a :class:`SidecarKernels` strategy of per-bucket
+numpy kernels) inside a fixed operator — one hash projection (``_hashed``),
+one build (``sidecar_build``), one per-bucket maintenance fold
+(``sidecar_maintain``: upsert, or delete with repair), one prefilter
+(``sidecar_prefilter``) and one dedup gate (``sidecar_dedup``). Only int64
+``xxhash64`` base-hash COLUMNS cross into Python (whole-stage codegen, the
+url string never does — input_hint "no per-row Python"), and maintenance is
+O(|delta| + touched buckets), never a rebuild over the full seen table.
+
+The Bloom kernels below (k=7 positions by Kirsch–Mitzenmacher double
+hashing, pos_i = h1 + i*h2 mod m, ~1% fpr) are OR-mergeable: the build folds
+batch by batch and an upsert ORs the delta's bits into the bucket's bitset.
+The chained cuckoo filter (operators/cuckoo.py) supports deletion.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from functools import partial
+from typing import Callable, Iterator, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -51,7 +54,7 @@ BLOOM_SEED2 = 0x9E3779B9         # second xxhash64 column's extra input
 
 
 def bloom_hash_cols(url: Column) -> Tuple[Column, Column]:
-    """The two JVM-side base-hash columns every bloom op derives from."""
+    """The two JVM-side base-hash columns every sidecar op derives from."""
     return F.xxhash64(url), F.xxhash64(url, F.lit(BLOOM_SEED2))
 
 
@@ -66,31 +69,24 @@ def _positions(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> np.ndarray:
     )
 
 
-def bloom_build_hashed(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> bytes:
-    bits = np.zeros(m_bits // 8, dtype=np.uint8)
+def _bloom_upsert(bitset: bytes, h1: np.ndarray, h2: np.ndarray) -> Tuple[bytes, int]:
+    """OR the keys' bits into a copy of ``bitset``; returns (bitset, keys)."""
+    bits = np.frombuffer(bytes(bitset), dtype=np.uint8).copy()
     if len(h1):
-        pos = _positions(h1, h2, m_bits)
+        pos = _positions(h1, h2, len(bits) * 8)
         masks = (1 << (pos & 7)).astype(np.uint8)
         np.bitwise_or.at(bits, pos >> 3, masks)
-    return bits.tobytes()
+    return bits.tobytes(), len(h1)
 
 
-def bloom_merge(a: bytes, b: bytes) -> bytes:
-    if len(a) < len(b):
-        a, b = b, a
-    out = np.frombuffer(a, dtype=np.uint8).copy()
-    if b:
-        small = np.frombuffer(b, dtype=np.uint8)
-        # merging differently-sized filters is unsound; callers keep m fixed
-        assert len(small) == len(out), "bloom size mismatch"
-        out |= small
-    return out.tobytes()
+def _bloom_build(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> Tuple[bytes, int]:
+    return _bloom_upsert(bytes(m_bits // 8), h1, h2)
 
 
 def bloom_maybe_contains_hashed(
     bitset: bytes, h1: np.ndarray, h2: np.ndarray
 ) -> np.ndarray:
-    bits = np.frombuffer(bitset, dtype=np.uint8)
+    bits = np.frombuffer(bytes(bitset), dtype=np.uint8)
     m = len(bits) * 8
     if not len(h1):
         return np.zeros(0, dtype=bool)
@@ -99,8 +95,25 @@ def bloom_maybe_contains_hashed(
 
 
 # ---------------------------------------------------------------------------
-# Distributed operators
+# The sidecar operator: one projection, build, maintenance fold and probe
 # ---------------------------------------------------------------------------
+
+
+class SidecarKernels(NamedTuple):
+    """What makes one filter kind: its row schema ``(bucket, <size>,
+    <payload>, n_keys)`` and the per-bucket numpy kernels over int64 base
+    hashes. ``payload`` is the stored cell (bytes or a list of bytes)."""
+
+    schema: StructType
+    # build must see the bucket's whole key set at once (a cuckoo table's
+    # bytes depend on insert order); False folds batch by batch
+    whole_bucket: bool
+    build: Callable      # (h1, h2, size) -> (payload, n_keys)
+    upsert: Callable     # (payload, h1, h2) -> (payload, n_added)
+    probe: Callable      # (payload, h1, h2) -> bool mask
+    # (payload, h1, h2, kept_h1, kept_h2) -> (payload, n_keys change)
+    delete: Optional[Callable] = None
+
 
 BLOOM_SCHEMA = StructType(
     [
@@ -111,6 +124,10 @@ BLOOM_SCHEMA = StructType(
     ]
 )
 
+BLOOM = SidecarKernels(
+    BLOOM_SCHEMA, False, _bloom_build, _bloom_upsert, bloom_maybe_contains_hashed
+)
+
 
 def anti_join_new(candidates: DataFrame, seen: DataFrame, key: str = "url") -> DataFrame:
     """Exact dedup gate: rows of ``candidates`` whose key never appeared in
@@ -118,101 +135,133 @@ def anti_join_new(candidates: DataFrame, seen: DataFrame, key: str = "url") -> D
     return candidates.join(seen.select(key).distinct(), on=key, how="left_anti")
 
 
-def bucket_col(host_hash, n_buckets: int):
-    return (host_hash % n_buckets).cast("int")
-
-
-def bloom_sidecar_build(
-    seen: DataFrame,
-    n_buckets: int = 64,
-    m_bits: int = 1 << 20,
-    url_col: str = "url",
-    host_hash_col: str = "host_hash",
+def _hashed(
+    df: DataFrame, n_buckets: int, url_col: str, host_hash_col: str,
+    carry: bool = False,
 ) -> DataFrame:
-    """Build the per-bucket bloom sidecar from a url_seen table (or a round's
-    new_seen DELTA — see ``bloom_sidecar_merge`` for incremental maintenance).
+    """The one hash projection: ``_bucket, _h1, _h2`` (after every input
+    column when ``carry``). Uses ``host_hash_col`` when present and derives
+    it from the url's host otherwise (JVM-side, no Python)."""
+    if host_hash_col in df.columns:
+        hh = F.col(host_hash_col)
+    else:
+        from ..functions import host_hash_col as _hh, parse_host
 
-    Buckets are host_hash % n_buckets, so a bucket's filter co-locates with
-    the frontier partitioning. m_bits is fixed per sidecar so filters merge.
-    Only (bucket, h1, h2) int64 columns cross into Python — no URL strings,
-    no per-row hashing.
-    """
+        hh = _hh(parse_host(F.col(url_col)))
     h1, h2 = bloom_hash_cols(F.col(url_col))
-
-    def build(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Accumulate across the partition's arrow batches so each bucket
-        # (hash-pinned to exactly one partition by the repartition below)
-        # emits exactly one merged filter row.
-        acc: dict = {}
-        counts: dict = {}
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            for bucket, grp in pdf.groupby("_bucket"):
-                b = int(bucket)
-                built = bloom_build_hashed(
-                    grp["_h1"].to_numpy(), grp["_h2"].to_numpy(), m_bits
-                )
-                acc[b] = bloom_merge(acc[b], built) if b in acc else built
-                counts[b] = counts.get(b, 0) + len(grp)
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "bucket": list(acc.keys()),
-                    "m_bits": [m_bits] * len(acc),
-                    "bitset": list(acc.values()),
-                    "n_keys": [counts[b] for b in acc.keys()],
-                }
-            )
-
-    hashed = seen.select(
-        bucket_col(F.col(host_hash_col), n_buckets).alias("_bucket"),
+    return df.select(
+        *(["*"] if carry else []),
+        (hh % n_buckets).cast("int").alias("_bucket"),
         h1.alias("_h1"),
         h2.alias("_h2"),
     )
-    return hashed.repartition(n_buckets, "_bucket").mapInPandas(build, BLOOM_SCHEMA)
 
 
-def bloom_sidecar_merge(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """OR-merge two sidecars bucket-wise (both built with the same n_buckets
-    and m_bits). This is the per-round incremental maintenance op: merge the
-    new_seen delta's sidecar into the persisted one — O(|delta| + n_buckets)
-    instead of the O(|seen|) full rebuild."""
+def _hash_arrays(pdf: pd.DataFrame) -> Tuple[np.ndarray, np.ndarray]:
+    return pdf["_h1"].to_numpy(np.int64), pdf["_h2"].to_numpy(np.int64)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: Optional[bytes] = None
-        n = 0
-        for bs in pdf["bitset"]:
-            b = bytes(bs)
-            acc = b if acc is None else bloom_merge(acc, b)
-            n += 1
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "m_bits": [int(pdf["m_bits"].iloc[0])],
-                "bitset": [acc],
-                "n_keys": [int(pdf["n_keys"].sum())],
-            }
+
+def sidecar_build(
+    kernels: SidecarKernels, seen: DataFrame, n_buckets: int, size: int,
+    url_col: str = "url", host_hash_col: str = "host_hash",
+) -> DataFrame:
+    """One filter row per bucket from a url_seen table. Buckets are
+    host_hash % n_buckets, so a bucket's filter co-locates with the frontier
+    partitioning; the repartition pins each bucket to one task, which emits
+    exactly one row for it. Only (bucket, h1, h2) int64 columns cross into
+    Python — no URL strings, no per-row hashing."""
+
+    def build(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: dict = {}      # bucket -> (payload, n_keys)
+        pending: dict = {}  # bucket -> hash chunks (whole_bucket kernels)
+
+        def fold(b: int, h1: np.ndarray, h2: np.ndarray) -> None:
+            if b in acc:
+                payload, n = acc[b]
+                payload, added = kernels.upsert(payload, h1, h2)
+                acc[b] = (payload, n + added)
+            else:
+                acc[b] = kernels.build(h1, h2, size)
+
+        for pdf in pdf_iter:
+            for bucket, grp in pdf.groupby("_bucket"):
+                if kernels.whole_bucket:
+                    pending.setdefault(int(bucket), []).append(_hash_arrays(grp))
+                else:
+                    fold(int(bucket), *_hash_arrays(grp))
+        for b, chunks in pending.items():
+            fold(b, *(np.concatenate(c) for c in zip(*chunks)))
+        if acc:
+            yield pd.DataFrame(
+                [(b, size, p, n) for b, (p, n) in acc.items()],
+                columns=kernels.schema.names,
+            )
+
+    hashed = _hashed(seen, n_buckets, url_col, host_hash_col)
+    return hashed.repartition(n_buckets, "_bucket").mapInPandas(build, kernels.schema)
+
+
+def sidecar_maintain(
+    kernels: SidecarKernels, sidecar: DataFrame, keys_df: DataFrame, op: str,
+    size: int, n_buckets: int, url_col: str = "url",
+    host_hash_col: str = "host_hash", kept: Optional[DataFrame] = None,
+) -> DataFrame:
+    """The per-bucket maintenance fold: cogroup each sidecar row with its
+    bucket's keys and apply ``op`` — ``"upsert"`` inserts ``keys_df``,
+    ``"delete"`` removes it and then re-inserts any of ``kept`` a colliding
+    delete stripped. ``kept`` is semi-joined to the buckets ``keys_df``
+    touches, so the repair side is never corpus-wide (and empty when
+    ``kept`` is None). Buckets with no keys pass through untouched; an
+    upsert into a bucket with no row builds one of ``size``; a delete there
+    is a no-op."""
+    keys = _hashed(keys_df, n_buckets, url_col, host_hash_col)
+    keys = keys.withColumn("_kept", F.lit(False))
+    if kept is not None:
+        touched = keys.select("_bucket").distinct()  # ≤ n_buckets rows
+        repair = _hashed(kept, n_buckets, url_col, host_hash_col).join(
+            touched, "_bucket", "left_semi"
         )
+        keys = keys.unionByName(repair.withColumn("_kept", F.lit(True)))
+    names = kernels.schema.names  # bucket, <size>, <payload>, n_keys
 
-    u = base.unionByName(delta)
-    return u.groupBy("bucket").applyInPandas(merge, BLOOM_SCHEMA)
+    def fold(key, side_pdf: pd.DataFrame, keys_pdf: pd.DataFrame) -> pd.DataFrame:
+        if keys_pdf.empty:
+            return side_pdf[names]
+        h1, h2 = _hash_arrays(keys_pdf[~keys_pdf["_kept"]])
+        if side_pdf.empty:
+            if op == "delete":
+                return pd.DataFrame(columns=names)
+            payload, n = kernels.build(h1, h2, size)
+            m = size
+        else:
+            row = side_pdf.iloc[0]
+            m, payload, n = int(row[names[1]]), row[names[2]], int(row["n_keys"])
+            if op == "delete":
+                payload, change = kernels.delete(
+                    payload, h1, h2, *_hash_arrays(keys_pdf[keys_pdf["_kept"]])
+                )
+            else:
+                payload, change = kernels.upsert(payload, h1, h2)
+            n += change
+        return pd.DataFrame([(int(key[0]), m, payload, n)], columns=names)
+
+    return (
+        sidecar.groupBy("bucket")
+        .cogroup(keys.groupBy("_bucket"))
+        .applyInPandas(fold, kernels.schema)
+    )
 
 
-def bloom_prefilter(
-    candidates: DataFrame,
-    sidecar: DataFrame,
-    url_col: str = "url",
-    host_hash_col: str = "host_hash",
-    n_buckets: int = 64,
+def sidecar_prefilter(
+    kernels: SidecarKernels, candidates: DataFrame, sidecar: DataFrame,
+    url_col: str = "url", host_hash_col: str = "host_hash", n_buckets: int = 64,
     cache_registry: Optional[list] = None,
 ) -> Tuple[DataFrame, DataFrame]:
     """Split candidates into (definitely_new, maybe_seen) using the sidecar.
 
-    Cogroup by bucket: each task sees (candidate slice, its bloom row) —
+    Cogroup by bucket: each task sees (candidate slice, its filter row) —
     no broadcast of the full sidecar, no shuffle of the seen table.
     Returns (new, maybe); ``maybe`` still needs the exact anti-join.
-    The bitset probes are pure numpy over the JVM-computed (h1, h2) columns.
 
     The split output is persisted (both returned branches read it; without a
     persist each downstream action re-runs the shuffle + Python probe pass
@@ -221,26 +270,12 @@ def bloom_prefilter(
     long-running crawl that never releases these accumulates one cached
     relation per round (VERDICT r2 wrong #3).
     """
-    if host_hash_col in candidates.columns:
-        hh = F.col(host_hash_col)
-    else:  # derive from the url's host on the fly (JVM-side, no Python)
-        from ..functions import host_hash_col as _hh, parse_host
-
-        hh = _hh(parse_host(F.col(url_col)))
-    h1, h2 = bloom_hash_cols(F.col(url_col))
-    cand = (
-        candidates.withColumn("_bucket", bucket_col(hh, n_buckets))
-        .withColumn("_h1", h1)
-        .withColumn("_h2", h2)
-    )
-    side = sidecar.withColumnRenamed("bucket", "_bucket")
-
-    internal = {"_bucket", "_h1", "_h2"}
-    carry = [f.name for f in cand.schema.fields if f.name not in internal]
+    cand = _hashed(candidates, n_buckets, url_col, host_hash_col, carry=True)
+    carry = candidates.columns
     out_schema = StructType(
-        [f for f in cand.schema.fields if f.name not in internal]
-        + [StructField("_maybe", IntegerType())]
+        candidates.schema.fields + [StructField("_maybe", IntegerType())]
     )
+    payload_col = kernels.schema.names[2]
 
     def split(key, cand_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
         if cand_pdf.empty:
@@ -248,15 +283,12 @@ def bloom_prefilter(
         if side_pdf.empty:
             maybe = np.zeros(len(cand_pdf), dtype=bool)
         else:
-            bitset = side_pdf.iloc[0]["bitset"]
-            maybe = bloom_maybe_contains_hashed(
-                bytes(bitset), cand_pdf["_h1"].to_numpy(), cand_pdf["_h2"].to_numpy()
-            )
+            maybe = kernels.probe(side_pdf.iloc[0][payload_col], *_hash_arrays(cand_pdf))
         out = cand_pdf[carry].copy()
         out["_maybe"] = maybe.astype("int32")
         return out
 
-    joined = cand.groupBy("_bucket").cogroup(side.groupBy("_bucket")).applyInPandas(
+    joined = cand.groupBy("_bucket").cogroup(sidecar.groupBy("bucket")).applyInPandas(
         split, out_schema
     )
     # Pin the prefilter output: every caller consumes BOTH splits (union of
@@ -271,14 +303,58 @@ def bloom_prefilter(
     return new, maybe
 
 
+def sidecar_dedup(
+    kernels: SidecarKernels, candidates: DataFrame, seen: DataFrame,
+    sidecar: Optional[DataFrame] = None, url_col: str = "url",
+    n_buckets: int = 64, cache_registry: Optional[list] = None,
+) -> DataFrame:
+    """Full dedup gate: prefilter (when a sidecar is supplied), then the
+    exact anti-join on the maybe-residue only. Semantics identical to
+    ``anti_join_new`` — the filter is a shuffle saver, never an answer.
+
+    ``n_buckets`` MUST equal the value the sidecar was built with: bucket ids
+    are host_hash % n_buckets on both sides, and a mismatch silently routes
+    candidates to empty buckets (= false negatives in the prefilter)."""
+    if sidecar is None:
+        return anti_join_new(candidates, seen, url_col)
+    new, maybe = sidecar_prefilter(
+        kernels, candidates, sidecar, url_col=url_col, n_buckets=n_buckets,
+        cache_registry=cache_registry,
+    )
+    return new.unionByName(anti_join_new(maybe, seen, url_col))
+
+
+# ---------------------------------------------------------------------------
+# Bloom sidecar: the operator over the bloom kernels
+# ---------------------------------------------------------------------------
+
+
+def bloom_sidecar_build(
+    seen: DataFrame,
+    n_buckets: int = 64,
+    m_bits: int = 1 << 20,
+    url_col: str = "url",
+    host_hash_col: str = "host_hash",
+) -> DataFrame:
+    """Per-bucket bloom filters from a url_seen table. m_bits is fixed per
+    sidecar; the build ORs each arrow batch into its bucket's bitset, so a
+    task never holds a whole bucket's hashes."""
+    return sidecar_build(BLOOM, seen, n_buckets, m_bits, url_col, host_hash_col)
+
+
+# (candidates, sidecar, url_col, host_hash_col, n_buckets, cache_registry)
+bloom_prefilter = partial(sidecar_prefilter, BLOOM)
+# (candidates, seen, sidecar=None, url_col, n_buckets, cache_registry)
+dedup_against_seen = partial(sidecar_dedup, BLOOM)
+
+
 class SeenFilterOps:
     """The three operations a URL-seen approximate-membership sidecar needs
     (north_star "Bloom/cuckoo"): ``build(seen)`` a fresh per-bucket filter
     table, ``maintain(sidecar, delta)`` fold a round's new_seen delta in
     incrementally, ``prefilter(candidates, sidecar, ...)`` split into
-    (definitely_new, maybe_seen). Both implementations share bucket layout,
-    hash columns, and the no-false-negative contract, so the crawl rounds
-    are strategy-agnostic."""
+    (definitely_new, maybe_seen). Every kind runs the same operator over
+    its own kernels, so the crawl rounds are strategy-agnostic."""
 
     def __init__(self, kind: str, build, maintain, prefilter) -> None:
         self.kind = kind
@@ -291,10 +367,12 @@ def seen_filter_ops(kind: str) -> "SeenFilterOps":
     """'bloom' (OR-mergeable bitsets, fastest build) or 'cuckoo'
     (fingerprint table, supports deletion — operators/cuckoo.py)."""
     if kind == "bloom":
+        # upsert ORs the round delta's bits into its buckets' bitsets:
+        # O(|delta| + n_buckets), and the rows equal a build over both sets
         return SeenFilterOps(
             "bloom",
             bloom_sidecar_build,
-            lambda side, delta: bloom_sidecar_merge(side, bloom_sidecar_build(delta)),
+            partial(sidecar_maintain, BLOOM, op="upsert", size=1 << 20, n_buckets=64),
             bloom_prefilter,
         )
     if kind == "cuckoo":
@@ -345,28 +423,3 @@ def flag_seen(
         "_dup", F.coalesce(F.col("_dup"), F.lit(0))
     )
     return new.withColumn("_dup", F.lit(0)).unionByName(checked)
-
-
-def dedup_against_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    sidecar: Optional[DataFrame] = None,
-    url_col: str = "url",
-    n_buckets: int = 64,
-    cache_registry: Optional[list] = None,
-) -> DataFrame:
-    """Full dedup gate: bloom prefilter (when a sidecar is supplied) then the
-    exact anti-join on the maybe-residue only. Semantics identical to
-    ``anti_join_new`` — the bloom is purely an I/O/shuffle saver.
-
-    ``n_buckets`` MUST equal the value the sidecar was built with: bucket ids
-    are host_hash % n_buckets on both sides, and a mismatch silently routes
-    candidates to empty buckets (= false negatives in the prefilter)."""
-    if sidecar is None:
-        return anti_join_new(candidates, seen, url_col)
-    new, maybe = bloom_prefilter(
-        candidates, sidecar, url_col=url_col, n_buckets=n_buckets,
-        cache_registry=cache_registry,
-    )
-    checked = anti_join_new(maybe, seen, url_col)
-    return new.unionByName(checked)

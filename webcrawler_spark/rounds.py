@@ -934,8 +934,9 @@ def run_crawl(
         if _sf is not None:
             # the delta maintenance + checkpoint runs on a BACKGROUND thread:
             # the next round resolves it right before flag_seen, so it
-            # overlaps with the next round's parse job (_AsyncDF). bloom:
-            # OR-merge of the delta's bitsets; cuckoo: in-place upsert.
+            # overlaps with the next round's parse job (_AsyncDF). One fold
+            # per touched bucket: bloom ORs the delta's bits in, cuckoo
+            # inserts its fingerprints.
             merged = _sf.maintain(sidecar, new_seen)
             sidecar = _AsyncDF(lambda m=merged: m.localCheckpoint(eager=True))
 

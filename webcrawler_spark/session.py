@@ -12,13 +12,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on
+    (its affinity mask, so a taskset-pinned run sizes itself to its pin)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "webcrawler-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     # 3x cores, not 1x: with exactly |cores| shuffle tasks one straggler adds
     # a full 1/cores to stage wall; finer tasks rebalance around slow cores

@@ -79,27 +79,32 @@ def docs_stream(
 ) -> DataFrame:
     """WebPageProcessor.processUrl over a *stream* of fetched pages.
 
-    Identical columns to rounds.process_queue's OK rows (id, url, domain,
-    crawl_ts, status, title, contents, content_length, hash, language): the
-    extraction kernel (mapInPandas) and all derived-column built-ins are
-    stateless, so Spark runs them unchanged on the unbounded relation.
+    Emits rounds.process_queue's docs columns for fetched pages (id, url,
+    domain, crawl_ts, status, title, contents, content_length, hash,
+    language) with the same statuses: OK, or ERROR_PARSE for a page the
+    kernel refused (null id/title/contents/language, content_length 0, hash
+    over the url alone). The extraction kernel and all derived-column
+    built-ins are stateless, so Spark runs them unchanged on the unbounded
+    relation.
     """
     extract_fn, _ = make_extract_pages(config, carry_cols=["lang", "warc_ts"])
     out_schema = extract_schema_with(
         [StructField("lang", StringType()), StructField("warc_ts", TimestampType())]
     )
     ex = pages.select("url", "html", "lang", "warc_ts").mapInPandas(extract_fn, out_schema)
+    is_ok = ~F.col("parse_error")
+    contents = F.when(is_ok, F.col("segments"))  # null on ERROR_PARSE
     return ex.select(
-        doc_id_col(F.col("url")).alias("id"),
+        F.when(is_ok, doc_id_col(F.col("url"))).alias("id"),
         F.col("url"),
         parse_host(F.col("url")).alias("domain"),
         F.col(crawl_ts_col).alias("crawl_ts"),
-        F.lit("OK").alias("status"),
-        F.col("title"),
-        F.col("segments").alias("contents"),
-        content_length_col(F.col("segments")).alias("content_length"),
-        F.col("lang").alias("language"),
-        content_hash_segments(F.col("url"), F.col("segments")).alias("hash"),
+        F.when(is_ok, F.lit("OK")).otherwise(F.lit("ERROR_PARSE")).alias("status"),
+        F.when(is_ok, F.col("title")).alias("title"),
+        contents.alias("contents"),
+        content_length_col(contents).alias("content_length"),
+        F.when(is_ok, F.col("lang")).alias("language"),
+        content_hash_segments(F.col("url"), contents).alias("hash"),
     )
 
 
